@@ -16,6 +16,7 @@ Layout:
     pipeline.py the fused mapInPandas extraction pipeline + skew handling
     catalog.py  snapshot-manifest table layout (Iceberg-style, parquet-backed)
     datagen.py  deterministic seeded synthetic pages generator
+    memo.py     memoized, eagerly materialized operator intermediates
     functions/  column-expression equivalents of the reference's scalar ops
     operators/  relational + training-data operators (dedup, ANN, text)
 """

@@ -40,13 +40,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
-from .dedup import (
-    _SHINGLE_CACHE,
-    _cache_key,
-    _docs,
-    _span_windows,
-    dedup_connected_components,
-)
+from ..memo import memo
+from .dedup import _docs, _span_windows, dedup_connected_components
 
 # Benchmark slice: hash15(doc_id) below 5% of the 60-bit hash space.
 # Same stable-hash membership primitive as sketch.sample_hash_stable —
@@ -445,16 +440,15 @@ def dedup_lines_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dedupable line hash — the first-occurrence index a corpus-level
     # line dedup materializes anyway (same persisted-index pattern as
     # the minhash band table); repeated calls reuse ONE copy.
-    from .dedup import _SHINGLE_CACHE, _cache_key
-
-    fkey = _cache_key(spark, sf_dir, "line-firsts")
-    firsts = _SHINGLE_CACHE.get(fkey)
-    if firsts is None:
-        firsts = dedupable.groupBy("h").agg(
+    firsts = memo(
+        spark,
+        sf_dir,
+        "line-firsts",
+        lambda: dedupable.groupBy("h").agg(
             F.min(F.struct("doc_id", "pos")).alias("first"),
             F.count(F.lit(1)).alias("n_occ"),
-        ).persist()
-        _SHINGLE_CACHE[fkey] = firsts
+        ),
+    )
     head = firsts.orderBy(F.col("n_occ").desc(), "h").limit(LINE_HEAD_K)
     with_head = dedupable.join(
         F.broadcast(head.select("h", F.col("first").alias("first_h"))),
@@ -670,24 +664,18 @@ def _bloom_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
     side never touches the corpus; the rescan hazard is an artifact of
     this fixture deriving its blocklist from the corpus itself, but the
     persist-once shape is right either way.)"""
-    key = _cache_key(spark, sf_dir, "bloom_bits")
-    df = _SHINGLE_CACHE.get(key)
-    if df is None:
-        d = _bloom_urls(spark, sf_dir)
-        df = (
-            d.filter(TX.hash15(F.col("url")) % BLOOM_BLOCK_MOD == 0)
-            .select(
-                F.explode(
-                    F.array(
-                        *[_bloom_pos(F.col("url"), j) for j in range(BLOOM_K)]
-                    )
-                ).alias("pos")
-            )
+    pos = F.array(*[_bloom_pos(F.col("url"), j) for j in range(BLOOM_K)])
+    return memo(
+        spark,
+        sf_dir,
+        "bloom_bits",
+        lambda: (
+            _bloom_urls(spark, sf_dir)
+            .filter(TX.hash15(F.col("url")) % BLOOM_BLOCK_MOD == 0)
+            .select(F.explode(pos).alias("pos"))
             .distinct()
-            .persist()
-        )
-        _SHINGLE_CACHE[key] = df
-    return df
+        ),
+    )
 
 
 def filter_bloom_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:

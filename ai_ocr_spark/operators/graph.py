@@ -60,6 +60,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import memo
+
 PR_ITERS = 5
 PR_UNIT = 10**12
 PR_BASE = (15 * PR_UNIT) // 100
@@ -90,31 +92,24 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _graph_pins(spark: SparkSession, sf_dir: str) -> tuple:
     """The Pregel co-partition pin both link-analysis operators share:
     nodes hash-pinned on doc_id, edges (with outdeg) on src, both at
-    the session's shuffle width, persisted + MEMOIZED + materialized
-    eagerly (_SHINGLE_CACHE policy — the r4 shape persisted these
-    inside each operator and unpersisted them before the caller's
-    action ever ran, so every run rebuilt the edge table's distinct +
-    outdeg join from the scan). At 10^12 edges this pair is the
+    the session's shuffle width, built through memo (the r4 shape
+    persisted these inside each operator and unpersisted them before
+    the caller's action ever ran, so every run rebuilt the edge table's
+    distinct + outdeg join from the scan). At 10^12 edges this pair is the
     partitioned graph index a cluster checkpoints once and every
     power-iteration consumer (PageRank, SALSA, components) reuses."""
-    from .dedup import _SHINGLE_CACHE, _cache_key
-
     par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    key = _cache_key(spark, sf_dir, "graph-pins")
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .repartition(par, "doc_id")
-        .persist()
+    return memo(
+        spark,
+        sf_dir,
+        "graph-pins",
+        lambda: (
+            spark.read.parquet(f"{sf_dir}/documents.parquet")
+            .select("doc_id")
+            .repartition(par, "doc_id"),
+            _edges(spark, sf_dir).repartition(par, "src"),
+        ),
     )
-    e_src = _edges(spark, sf_dir).repartition(par, "src").persist()
-    docs.count()  # eager: lazy memoized persists race (CLAUDE.md)
-    e_src.count()
-    _SHINGLE_CACHE[key] = (docs, e_src)
-    return docs, e_src
 
 
 def pagerank_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -205,6 +200,59 @@ SALSA_ITERS = 4
 SALSA_UNIT = 10**12
 
 
+def _salsa_index(spark: SparkSession, sf_dir: str) -> tuple:
+    """(e_dst, auth), memoized: the dst-pinned edge table (indeg
+    attached) and the final-round auth vector of graph_salsa."""
+
+    def build() -> tuple:
+        par = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        docs, e_src = _graph_pins(spark, sf_dir)
+        # dst-pinned twin derives FROM the cached src pin (indeg
+        # aggregate included), never re-running the edge build's
+        # distinct + outdeg join from the scan
+        indeg = e_src.groupBy("dst").agg(
+            F.count(F.lit(1)).cast("long").alias("indeg")
+        )
+        e_dst = (
+            e_src.select("src", "dst").join(indeg, "dst").repartition(par, "dst")
+        )
+        # intermediate rounds skip the zero-fill docs join: a node
+        # absent from an aggregate carries exactly the mass its 0-fill
+        # row would (nothing), so the sums are identical and each
+        # aggregate's dst/src partitioning feeds the next join with no
+        # re-pin — only the FINAL auth/hub get the docs left-join so
+        # the output covers every node like the oracle's
+        hub = docs.select(
+            F.col("doc_id").alias("src"),
+            F.lit(SALSA_UNIT).cast("long").alias("v"),
+        )
+        a_raw = None
+        for i in range(SALSA_ITERS):
+            a_raw = (
+                e_src.join(hub, "src")
+                .select("dst", F.expr("v DIV outdeg").alias("c"))
+                .groupBy("dst")
+                .agg(F.sum("c").alias("c"))
+            )
+            if i == SALSA_ITERS - 1:
+                break  # final hub half-step runs below, off cached auth
+            h_raw = (
+                e_dst.join(a_raw.select("dst", F.col("c").alias("v")), "dst")
+                .select("src", F.expr("v DIV indeg").alias("c"))
+                .groupBy("src")
+                .agg(F.sum("c").alias("c"))
+            )
+            hub = h_raw.select("src", F.col("c").alias("v"))
+        auth = docs.join(
+            a_raw.withColumnRenamed("dst", "doc_id"), "doc_id", "left"
+        ).select(
+            "doc_id", F.coalesce(F.col("c"), F.lit(0)).cast("long").alias("v")
+        )
+        return e_dst, auth
+
+    return memo(spark, sf_dir, "salsa", build)
+
+
 def graph_salsa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SALSA hub/authority scores (Lempel & Moran 2000) — the
     degree-normalized HITS the link-analysis literature pairs with
@@ -236,80 +284,17 @@ def graph_salsa(spark: SparkSession, sf_dir: str) -> DataFrame:
     auth vector, which has TWO consumers (the last hub half-step and
     the output join): left bare, the whole 2*SALSA_ITERS-join chain
     executed twice per action (measured 8.2s median / 14s max at
-    sf0.1). It is therefore persisted and materialized eagerly, and
-    the pins + final auth are memoized in _SHINGLE_CACHE like every
-    other index artifact (the r4 shape unpersisted the pins before
-    the caller's action ever ran, so all three were no-ops and every
-    run rebuilt the edge tables from the scan). At 10^12 edges the
+    sf0.1). It is therefore memoized with the dst pin (_salsa_index)
+    like every other index artifact (the r4 shape unpersisted the pins
+    before the caller's action ever ran, so all three were no-ops and
+    every run rebuilt the edge tables from the scan). At 10^12 edges the
     cached tuple IS the partitioned graph index a cluster would
     checkpoint; a probe recomputes only the final hub half-step.
 
     The DuckDB twin unrolls the same SALSA_ITERS rounds as chained
     CTEs over the identical arithmetic edge set — bit-for-bit."""
-    from .dedup import _SHINGLE_CACHE, _cache_key
-
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    docs, e_src = _graph_pins(spark, sf_dir)
-    key = _cache_key(spark, sf_dir, "salsa")
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is None:
-        # dst-pinned twin derives FROM the cached src pin (indeg
-        # aggregate included), never re-running the edge build's
-        # distinct + outdeg join from the scan
-        indeg = e_src.groupBy("dst").agg(
-            F.count(F.lit(1)).cast("long").alias("indeg")
-        )
-        e_dst = (
-            e_src.select("src", "dst")
-            .join(indeg, "dst")
-            .repartition(par, "dst")
-            .persist()
-        )
-        # intermediate rounds skip the zero-fill docs join: a node
-        # absent from an aggregate carries exactly the mass its 0-fill
-        # row would (nothing), so the sums are identical and each
-        # aggregate's dst/src partitioning feeds the next join with no
-        # re-pin — only the FINAL auth/hub get the docs left-join so
-        # the output covers every node like the oracle's
-        hub = docs.select(
-            F.col("doc_id").alias("src"),
-            F.lit(SALSA_UNIT).cast("long").alias("v"),
-        )
-        a_raw = None
-        for i in range(SALSA_ITERS):
-            a_raw = (
-                e_src.join(hub, "src")
-                .select("dst", F.expr("v DIV outdeg").alias("c"))
-                .groupBy("dst")
-                .agg(F.sum("c").alias("c"))
-            )
-            if i == SALSA_ITERS - 1:
-                break  # final hub half-step runs below, off cached auth
-            h_raw = (
-                e_dst.join(a_raw.select("dst", F.col("c").alias("v")), "dst")
-                .select("src", F.expr("v DIV indeg").alias("c"))
-                .groupBy("src")
-                .agg(F.sum("c").alias("c"))
-            )
-            hub = h_raw.select("src", F.col("c").alias("v"))
-        auth = (
-            docs.join(
-                a_raw.withColumnRenamed("dst", "doc_id"), "doc_id", "left"
-            )
-            .select(
-                "doc_id",
-                F.coalesce(F.col("c"), F.lit(0)).cast("long").alias("v"),
-            )
-            .persist()
-        )
-        # eager, dependency order: lazy memoized persists race when the
-        # first action submits concurrent join-input stages (CLAUDE.md);
-        # docs/e_src were already materialized by _graph_pins
-        e_dst.count()
-        auth.count()
-        _SHINGLE_CACHE[key] = (e_dst, auth)
-    else:
-        e_dst, auth = cached
+    docs, _ = _graph_pins(spark, sf_dir)
+    e_dst, auth = _salsa_index(spark, sf_dir)
     h_raw = (
         e_dst.join(auth.select(F.col("doc_id").alias("dst"), "v"), "dst")
         .select("src", F.expr("v DIV indeg").alias("c"))
@@ -395,50 +380,35 @@ def _tri_oriented(spark: SparkSession, sf_dir: str) -> tuple:
     is bounded by O(sqrt(m)), so wedge generation is O(m^1.5) total
     instead of sum(deg^2) — the difference between feasible and not on
     a power-law web graph whose max degree is ~N."""
-    from .dedup import _SHINGLE_CACHE, _cache_key
 
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    key = _cache_key(spark, sf_dir, "tri-oriented")
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    _, e_src = _graph_pins(spark, sf_dir)
-    und = (
-        e_src.select(
+    def build() -> tuple:
+        par = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        _, e_src = _graph_pins(spark, sf_dir)
+        und = e_src.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+        ).distinct()
+        deg = (
+            und.select(F.col("a").alias("node"))
+            .unionAll(und.select(F.col("b").alias("node")))
+            .groupBy("node")
+            .agg(F.count(F.lit(1)).cast("long").alias("deg"))
+            .repartition(par, "node")
         )
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-        .repartition(par, "node")
-        .persist()
-    )
-    o = (
-        und.join(
-            deg.select(F.col("node").alias("a"), F.col("deg").alias("dega")), "a"
+        da = deg.select(F.col("node").alias("a"), F.col("deg").alias("dega"))
+        db = deg.select(F.col("node").alias("b"), F.col("deg").alias("degb"))
+        lo_first = F.col("dega") <= F.col("degb")
+        o = (
+            und.join(da, "a")
+            .join(db, "b")
+            .select(
+                F.when(lo_first, F.col("a")).otherwise(F.col("b")).alias("lo"),
+                F.when(lo_first, F.col("b")).otherwise(F.col("a")).alias("hi"),
+            )
+            .repartition(par, "lo")
         )
-        .join(
-            deg.select(F.col("node").alias("b"), F.col("deg").alias("degb")), "b"
-        )
-        .select(
-            F.when(F.col("dega") <= F.col("degb"), F.col("a"))
-            .otherwise(F.col("b"))
-            .alias("lo"),
-            F.when(F.col("dega") <= F.col("degb"), F.col("b"))
-            .otherwise(F.col("a"))
-            .alias("hi"),
-        )
-        .repartition(par, "lo")
-        .persist()
-    )
-    deg.count()  # eager: lazy memoized persists race (CLAUDE.md)
-    o.count()
-    _SHINGLE_CACHE[key] = (deg, o)
-    return deg, o
+        return deg, o
+
+    return memo(spark, sf_dir, "tri-oriented", build)
 
 
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -712,15 +682,17 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTEs and matches exactly. Spark exits the loop early at the
     fixpoint (one scalar count per round crosses to the driver); the
     skipped rounds are no-ops by definition, so the fixed-depth twin
-    is value-identical.
+    is value-identical. A peel still non-empty after KCORE_ROUNDS
+    raises instead: there the twin would diverge.
 
     Scale shape: each round is ONE map-side-combined degree aggregate
     over the remaining edges plus two anti-joins keyed on the peeled
     set — no corpus-sized state beyond the edge table itself, and the
-    edge table only SHRINKS. Rounds are localCheckpoint-ed: the edge
-    frame feeds three consumers per round (degree count twice through
-    the union, two anti-joins), the dedup_connected_components
-    multi-consumer lineage rule, not the pagerank single-consumer one.
+    edge table only SHRINKS. The undirected edge and node prefix is
+    memoized; rounds are localCheckpoint-ed: the edge frame feeds three
+    consumers per round (degree count twice through the union, two
+    anti-joins), the dedup_connected_components multi-consumer lineage
+    rule, not the pagerank single-consumer one.
     At 10^12 edges the peel depth grows slowly (web-graph shells are
     shallow); full coreness (all k at once) graduates to the
     bin-by-degree delta-peel, noted here, same per-round plan.
@@ -731,24 +703,24 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangles) with the subgraph-density filter, over the same pinned
     edge machinery (_graph_pins).
     """
-    _, e_src = _graph_pins(spark, sf_dir)
-    und = (
-        e_src.select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
+
+    def build() -> tuple:
+        _, e_src = _graph_pins(spark, sf_dir)
+        und = e_src.select(
+            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+        ).distinct()
+        nodes = (
+            und.select(F.col("a").alias("doc_id"))
+            .union(und.select(F.col("b").alias("doc_id")))
+            .distinct()
         )
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = (
-        und.select(F.col("a").alias("doc_id"))
-        .union(und.select(F.col("b").alias("doc_id")))
-        .distinct()
-        .localCheckpoint()
-    )
-    alive = nodes
+        return und, nodes
+
+    und, alive = memo(spark, sf_dir, "kcore-prefix", build)
     removed: DataFrame | None = None
-    for r in range(1, KCORE_ROUNDS + 1):
+    # one round past the unroll: a non-empty peel there means the
+    # twin's fixed depth stopped short of the fixpoint
+    for r in range(1, KCORE_ROUNDS + 2):
         dege = (
             und.select(F.col("a").alias("doc_id"))
             .union(und.select(F.col("b").alias("doc_id")))
@@ -761,6 +733,10 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         bad = deg.filter(F.col("deg") < KCORE_K).localCheckpoint()
         if bad.count() == 0:
             break  # fixpoint — the twin's remaining unrolled rounds no-op
+        if r > KCORE_ROUNDS:
+            raise RuntimeError(
+                f"graph_kcore: no fixpoint within KCORE_ROUNDS={KCORE_ROUNDS}"
+            )
         rem_r = bad.select(
             "doc_id",
             F.lit(r).cast("long").alias("peel_round"),
@@ -899,9 +875,11 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     symmetric sums fold in ONE pass over the single-orientation edge
     list (Σx = Σ(da+db), Σxy = 2Σ(da·db), Σx² = Σ(da²+db²)) — no
     orientation union materializes. At fixture scale every product
-    stays far inside int64 (|num| ≈ 2·10^10 at sf0.1; 10^6·|num| ≈
-    2·10^16); past ~10^9 edges the sums graduate to DECIMAL(38,0),
-    same note as the k-means centroid sums.
+    stays inside int64 (|num| ≈ 2·10^10 at sf0.1; 10^6·|num| ≈
+    2·10^16), but not for long: on this edge generator 10^6·|num|
+    passes int64 at about 2·10^5 edges and 2M·Σx² at about 10^7, so
+    past ~10^5 edges the sums graduate to DECIMAL(38,0), same note as
+    the k-means centroid sums.
 
     Scale shape: degree aggregate (map-side combined) + one edge⋈deg
     join per endpoint + a constant-state global sum. Nothing after the

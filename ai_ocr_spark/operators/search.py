@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
+from ..memo import memo
 
 SEARCH_TOP_K = 5
 IDF_SCALE = 1_000_000
@@ -395,20 +396,15 @@ def search_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     decision generalized to ranked retrieval.
     """
     qterms, terms = _qterm_frames(spark)
-    from .dedup import _SHINGLE_CACHE, _cache_key
 
-    key = _cache_key(spark, sf_dir, "rrf-postings")
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is None:
-        docs, stats = _docs_and_stats(spark, sf_dir)
-        tf = _postings_with_dl(docs, terms).persist()
+    def build() -> tuple:
         # stats tokenizes the corpus for t_tokens and is consumed by
-        # THREE scorers (tfidf weights, bm25 idf, bm25 dlr) — persist
+        # THREE scorers (tfidf weights, bm25 idf, bm25 dlr) — memoize
         # the 1-row frame so those are cache reads, not corpus scans
-        stats = stats.persist()
-        _SHINGLE_CACHE[key] = (tf, stats)
-    else:
-        tf, stats = cached
+        docs, stats = _docs_and_stats(spark, sf_dir)
+        return _postings_with_dl(docs, terms), stats
+
+    tf, stats = memo(spark, sf_dir, "rrf-postings", build)
     kw = _rank_tfidf(tf, stats.select("n_docs"), qterms)
     bm = _rank_bm25(tf, stats, qterms)
     u = kw.select("query_id", "doc_id", "rnk").unionByName(
@@ -614,14 +610,10 @@ def search_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # the stored index: base postings + base df + base N. Memoized per
-    # (session, sf_dir) through the shared cache (clear_caches-evictable)
-    # like the minhash band index — repeated calls probe ONE persisted
-    # index instead of leaking a new persist() each time.
-    from .dedup import _SHINGLE_CACHE, _cache_key
-
-    key = _cache_key(spark, sf_dir, "idx-refresh")
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is None:
+    # (session, sf_dir) like the minhash band index — repeated calls
+    # probe ONE persisted index instead of leaking a new persist() each
+    # time.
+    def build() -> tuple:
         # one-split testdata parquet (CLAUDE.md footgun): repartition to
         # width BEFORE the tokenize-heavy postings projections or both
         # the index build and the increment scan run as single tasks.
@@ -630,11 +622,9 @@ def search_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         # paying a full-row exchange.
         par = max(spark.sparkContext.defaultParallelism, 8)
         docs = docs_raw.repartition(par)
-        tf_base = postings(docs.filter(~is_new)).persist()
-        tf_inc = postings(docs.filter(is_new)).persist()
-        _SHINGLE_CACHE[key] = (tf_base, tf_inc)
-    else:
-        tf_base, tf_inc = cached
+        return postings(docs.filter(~is_new)), postings(docs.filter(is_new))
+
+    tf_base, tf_inc = memo(spark, sf_dir, "idx-refresh", build)
     df_base = tf_base.groupBy("token").agg(F.count(F.lit(1)).alias("df_b"))
     n_base = docs_raw.filter(~is_new).select(
         F.count(F.lit(1)).alias("n_b")
@@ -776,31 +766,20 @@ def _pos_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     this table, term-partitioned; per-query derivation here stands in
     for reading it). pos counts the FILTERED token stream (0-based), so
     the DuckDB twin's row_number()-1 over non-empty tokens matches.
-
-    Eagerly counted before entering the cache: a lazily-persisted
-    memoized frame lets the first action's racing stages each rebuild
-    the blocks (CLAUDE.md footgun, measured 2.9s-17s swings).
     """
-    from .dedup import _SHINGLE_CACHE, _cache_key
 
-    key = _cache_key(spark, sf_dir, "pos-postings")
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    par = max(spark.sparkContext.defaultParallelism, 8)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(par)
-    vocab = spark.createDataFrame(
-        [(t,) for t in _positional_vocab()], "token string"
-    )
-    toks = F.filter(TX.tokens(F.col("text")), lambda t: t != "")
-    posts = (
-        docs.select("doc_id", F.posexplode(toks).alias("pos", "token"))
-        .join(F.broadcast(vocab), "token")
-        .persist()
-    )
-    posts.count()
-    _SHINGLE_CACHE[key] = posts
-    return posts
+    def build() -> DataFrame:
+        par = max(spark.sparkContext.defaultParallelism, 8)
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(par)
+        vocab = spark.createDataFrame(
+            [(t,) for t in _positional_vocab()], "token string"
+        )
+        toks = F.filter(TX.tokens(F.col("text")), lambda t: t != "")
+        return docs.select(
+            "doc_id", F.posexplode(toks).alias("pos", "token")
+        ).join(F.broadcast(vocab), "token")
+
+    return memo(spark, sf_dir, "pos-postings", build)
 
 
 def search_phrase_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

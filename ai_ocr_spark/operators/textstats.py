@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
+from ..memo import memo
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1239,18 +1240,16 @@ def text_langid_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nodes -> 2). The cached table is BOUNDED at <= DOC_PROFILE_K rows
     # per document — the doc profile a production LID system
     # materializes anyway; repeated calls reuse ONE copy.
-    from .dedup import _SHINGLE_CACHE, _cache_key
-
-    dkey = _cache_key(spark, sf_dir, "langid-docprof")
-    docprof = _SHINGLE_CACHE.get(dkey)
-    if docprof is None:
-        docprof = (
+    docprof = memo(
+        spark,
+        sf_dir,
+        "langid-docprof",
+        lambda: (
             dtg.withColumn("drank", F.row_number().over(dw))
             .filter(F.col("drank") <= DOC_PROFILE_K)
             .select("doc_id", "tg", "drank")
-            .persist()
-        )
-        _SHINGLE_CACHE[dkey] = docprof
+        ),
+    )
     q = docprof.groupBy("doc_id").agg(F.count(F.lit(1)).alias("qn"))
     matched = (
         docprof.join(F.broadcast(prof), "tg")

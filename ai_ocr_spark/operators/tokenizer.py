@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
+from ..memo import memo
 
 BPE_TOP_K = 40
 
@@ -329,16 +330,20 @@ def _encoded_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang rides the explode for free (functionally dependent on
     doc_id, so adding it to the groupBy key changes nothing).
 
-    Memoized per (session, sf_dir) through the shared cache: the two
-    driver queries consuming this frame (tokenizer_bpe_encode and
+    Memoized per (session, sf_dir) through memo: the two driver
+    queries consuming this frame (tokenizer_bpe_encode and
     tokenizer_vocab_coverage) would otherwise EACH re-run the full
-    BPE training loop and leak a fresh persisted copy."""
-    from .dedup import _SHINGLE_CACHE, _cache_key
+    BPE training loop and leak a fresh persisted copy. `enc` shares
+    the entry: it must stay persisted while the joined frame lives (the
+    skew-split tail join re-reads it on every consumer execution), and
+    clear_caches must unpersist it too."""
+    build = lambda: _encode_frames(spark, sf_dir)
+    return memo(spark, sf_dir, "bpe-encoded", build)[-1]
 
-    key = _cache_key(spark, sf_dir, "bpe-encoded")
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached[-1]
+
+def _encode_frames(spark: SparkSession, sf_dir: str) -> tuple:
+    """(enc, joined): per-word token lengths, and the per-doc word
+    counts joined to them."""
     merges = _train_merges(spark, sf_dir)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     tok = docs.select(
@@ -350,9 +355,7 @@ def _encoded_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = F.split(F.trim(F.regexp_replace(F.col("w"), "(.)", "$1 ")), " ")
     for _, left, right, _ in merges:
         sym = _fold_merge(sym, left, right)
-    enc = vocab.select(
-        "w", "n", F.size(sym).cast("long").alias("ntok")
-    ).persist()
+    enc = vocab.select("w", "n", F.size(sym).cast("long").alias("ntok"))
 
     # Zipf-skew split (the _skew_left_join shape, head keyed by corpus
     # frequency): hot words broadcast, cold tail shuffles.
@@ -366,13 +369,7 @@ def _encoded_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("ntok")
         .join(enc.select("w", "ntok"), "w", "left")
     )
-    joined = hot.unionByName(cold).persist()
-    # Both persisted frames go in the cache tuple: a bare `enc` persist
-    # would survive clear_caches() and strand one copy per cold-bench
-    # cycle (enc must stay persisted while `joined` is alive — the
-    # skew-split tail join re-reads it on every consumer execution).
-    _SHINGLE_CACHE[key] = (enc, joined)
-    return joined
+    return enc, hot.unionByName(cold)
 
 
 def tokenizer_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -2,9 +2,9 @@
 SALSA's single-execution final auth chain keep the physical shapes the
 100-TB story depends on."""
 
-from ai_ocr_spark.operators.dedup import _SHINGLE_CACHE, _cache_key
 from ai_ocr_spark.operators.graph import (
     _graph_pins,
+    _salsa_index,
     graph_salsa,
     pagerank_link_graph,
 )
@@ -64,9 +64,9 @@ def test_salsa_final_auth_is_materialized_once(spark):
     frame, so the output join and the hub half-step share ONE
     execution instead of running the 2*ITERS-join chain twice."""
     graph_salsa(spark, SF).count()
-    key = _cache_key(spark, SF, "salsa")
-    assert key in _SHINGLE_CACHE
-    e_dst, auth = _SHINGLE_CACHE[key]
+    entry = _salsa_index(spark, SF)
+    assert _salsa_index(spark, SF) is entry, "salsa index is not memoized"
+    e_dst, auth = entry
     assert auth.storageLevel.useMemory, "final auth is not persisted"
     assert e_dst.storageLevel.useMemory, "dst edge pin is not persisted"
 

@@ -14,7 +14,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def _fresh(spark):
-    from ai_ocr_spark.operators.dedup import clear_caches
+    from ai_ocr_spark.memo import clear_caches
 
     clear_caches()
     return spark

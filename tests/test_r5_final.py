@@ -93,6 +93,21 @@ def test_kcore_peel_rounds_monotone(spark):
     assert all(by_round[r] > 0 for r in rounds)
 
 
+def test_kcore_raises_when_the_unroll_stops_short(spark, monkeypatch):
+    """With KCORE_ROUNDS below the fixture's peel depth the DuckDB
+    twin would stop mid-peel; the Spark side must raise, not return a
+    frame that silently differs from it."""
+    import pytest
+
+    from ai_ocr_spark.operators import graph
+
+    _, rounds = _python_kcore(spark)
+    assert rounds >= 1
+    monkeypatch.setattr(graph, "KCORE_ROUNDS", rounds - 1)
+    with pytest.raises(RuntimeError, match="fixpoint"):
+        graph.graph_kcore(spark, SF)
+
+
 # --- sketch_kmv_intersect ----------------------------------------------
 
 
