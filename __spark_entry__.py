@@ -3,14 +3,16 @@
 entry(spark)  — flagship: the full extraction pipeline over pages
                 synthesized from sf0.001 documents.
 queries()     — operator inventory from SURVEY.md §2 + training-data ops.
-oracle_sql()  — DuckDB twins; omitted only for genuinely
-                non-SQL-expressible ops (noted inline).
+oracle_sql()  — the DuckDB twin of every query, same names, same order.
+
+Both are views of ``_OPS``, one (name, builder, twin) row per operator.
 """
 
 from __future__ import annotations
 
 import os
 import sys
+from collections import Counter
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,10 +45,6 @@ from ai_ocr_spark.streaming import stateful as SS  # noqa: E402
 from ai_ocr_spark.streaming import windows as SW  # noqa: E402
 
 
-def _stream_events_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return SW.stream_events_daily(spark, sf_dir)
-
-
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: pages -> fused kernel extraction -> extractions."""
     from ai_ocr_spark.pipeline import extract_pages, pages_from_documents
@@ -58,1240 +56,226 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-def _pipeline_main_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark pipeline main_text vs SQL-reconstructable expectation:
-    strip(wrap(text)) == whitespace-canonical text.
-
-    The comparison column is `nonempty` (main_text <> ''), NOT the
-    pipeline's `valid`: valid folds in schema validation, which SQL
-    cannot reconstruct — a fixture that happened to contain an
-    invoice/report keyword would make an equality oracle on `valid`
-    report a spurious mismatch. The real valid semantics are pinned by
-    tests/test_pipeline_parity.py against the kernel oracle."""
-    from pyspark.sql import functions as F
-
-    from ai_ocr_spark.pipeline import extract_pages, pages_from_documents
-
-    pages = pages_from_documents(spark, sf_dir)
-    return extract_pages(pages, run_id="oracle", num_partitions=8).select(
-        "url", "main_text", (F.col("main_text") != "").alias("nonempty")
-    )
+# One row per operator: (name, builder, DuckDB twin), in the order the
+# correctness harness reads them. It checks the first 50 rows; each
+# round, entries never checked go first, then those checked longest ago.
+_OPS: list[tuple[str, Callable[[SparkSession, str], DataFrame], str]] = [
+    ("graph_kcore", G.graph_kcore, G.KCORE_ORACLE_SQL),
+    ("sketch_kmv_intersect", SK.sketch_kmv_intersect, SK.KMV_INTERSECT_ORACLE_SQL),
+    ("events_anomaly_mad", TP.events_anomaly_mad, TP.ANOMALY_MAD_ORACLE_SQL),
+    ("rfm_customer_segments", R.rfm_customer_segments, R.RFM_ORACLE_SQL),
+    ("search_phrase_topk", SRCH.search_phrase_topk, SRCH.PHRASE_ORACLE_SQL),
+    ("collocations_pmi", QL.collocations_pmi, QL.PMI_ORACLE_SQL),
+    ("dedup_bloom_probe", SK.dedup_bloom_probe, SK.BLOOM_ORACLE_SQL),
+    ("search_query_expansion", SRCH.search_query_expansion, SRCH.EXPANSION_ORACLE_SQL),
+    ("search_spell_suggest", SRCH.search_spell_suggest, SRCH.SPELL_ORACLE_SQL),
+    ("graph_triangle_count", G.graph_triangle_count, G.TRIANGLE_ORACLE_SQL),
+    ("sketch_hll_merge_shards", SK.sketch_hll_merge_shards, SK.HLL_MERGE_ORACLE_SQL),
+    ("text_zipf_fit", QL.text_zipf_fit, QL.ZIPF_ORACLE_SQL),
+    ("text_keyphrases", QL.text_keyphrases, QL.KEYPHRASE_ORACLE_SQL),
+    ("langid_eval_confusion", TS.langid_eval_confusion, TS.LANGID_CONFUSION_ORACLE_SQL),
+    ("search_autocomplete", SRCH.search_autocomplete, SRCH.AUTOCOMPLETE_ORACLE_SQL),
+    ("text_winnow_fingerprints", TS.text_winnow_fingerprints, TS.WINNOW_ORACLE_SQL),
+    ("dedup_winnow_pairs", D.dedup_winnow_pairs, D.WINNOW_PAIRS_ORACLE_SQL),
+    ("graph_degree_powerlaw", G.graph_degree_powerlaw, G.DEGREE_POWERLAW_ORACLE_SQL),
+    ("mm_video_scene_cut", MM.mm_video_scene_cut_q, ORC.mm_video_scene_cut()),
+    ("mm_audio_vad", MM.mm_audio_vad_q, ORC.mm_audio_vad()),
+    ("events_funnel", R.events_funnel, R.FUNNEL_ORACLE_SQL),
+    ("events_retention", R.events_retention, R.RETENTION_ORACLE_SQL),
+    ("events_markov_transitions", R.events_markov_transitions, R.MARKOV_ORACLE_SQL),
+    ("ann_hamming_topk", SIM.ann_hamming_topk, ORC.ann_hamming_topk()),
+    ("stream_join_attribution", SW.stream_join_attribution, SW.ATTRIBUTION_ORACLE_SQL),
+    ("quality_filter_fineweb", TS.quality_filter_fineweb, ORC.quality_filter_fineweb()),
+    ("dedup_semdedup", SIM.dedup_semdedup, ORC.dedup_semdedup()),
+    ("decontam_embedding", CU.decontam_embedding, ORC.decontam_embedding()),
+    ("mm_ocr_text", MM.mm_ocr_text_q, ORC.mm_ocr_text()),
+    ("ann_rrf_hybrid", SRCH.ann_rrf_hybrid, SRCH.HYBRID_ORACLE_SQL),
+    ("ann_ivf_pq_topk", SIM.ann_ivf_pq_topk, SIM.IVFPQ_ORACLE_SQL),
+    ("ann_ivf_pq_recall", SIM.ann_ivf_pq_recall, ORC.ann_ivf_pq_recall()),
+    ("decontam_minhash", CU.decontam_minhash, ORC.decontam_minhash()),
+    ("mm_image_ahash", MM.mm_image_ahash, ORC.mm_image_ahash()),
+    ("text_readability", TS.text_readability, ORC.text_readability()),
+    ("graph_salsa", G.graph_salsa, G.SALSA_ORACLE_SQL),
+    ("text_pii_scrub", TS.text_pii_scrub, ORC.text_pii_scrub()),
+    ("embedding_kmeans", SIM.embedding_kmeans, SIM.KMEANS_ORACLE_SQL),
+    ("pagerank_link_graph", G.pagerank_link_graph, G.PAGERANK_ORACLE_SQL),
+    ("dedup_incremental_lsh", D.dedup_incremental_lsh, ORC.dedup_incremental_lsh()),
+    ("dedup_minhash_lsh", D.dedup_minhash_lsh, ORC.dedup_minhash_lsh()),
+    ("tokenizer_bpe_encode", TOK.tokenizer_bpe_encode, TOK.BPE_ENCODE_ORACLE_SQL),
+    ("search_rrf_fusion", SRCH.search_rrf_fusion, SRCH.RRF_ORACLE_SQL),
+    # the streaming drain of the quantile sketch must equal the batch
+    # recompute: one twin, two execution paths
+    ("stream_quantiles_logbin", SW.stream_quantiles_logbin, SK.QSKETCH_ORACLE_SQL),
+    # exact-reps LSH must reproduce the components labeling
+    ("dedup_lsh_exact_reps", D.dedup_lsh_exact_reps, ORC.dedup_connected_components()),
+    # the dimension-join eTLD+1 must reproduce the literal projection
+    ("url_domain_etld1_dim", TS.url_domain_etld1_dim, TS.URL_ETLD1_ORACLE_SQL),
+    ("pipeline_pdf_roundtrip", RP.pipeline_pdf_roundtrip, RP.ORACLE_SQL),
+    ("pipeline_warc_roundtrip", RT.pipeline_warc_roundtrip, RT.WARC_ORACLE_SQL),
+    ("dedup_embedding_keep_canonical", CU.dedup_embedding_keep_canonical,
+     ORC.dedup_embedding_keep_canonical()),
+    ("pipeline_invoice_roundtrip", RF.pipeline_invoice_roundtrip, RF.ORACLE_SQL),
+    # ---- the correctness harness checks the rows above ----
+    # batch==stream is the contract: the batch rule's twin verbatim
+    ("stream_anomaly_mad", SW.stream_anomaly_mad, TP.ANOMALY_MAD_ORACLE_SQL),
+    ("graph_assortativity", G.graph_assortativity, G.ASSORTATIVITY_ORACLE_SQL),
+    ("graph_host_edges", G.graph_host_edges, G.HOST_EDGES_ORACLE_SQL),
+    ("graph_ppr_seeds", G.graph_ppr_seeds, G.PPR_ORACLE_SQL),
+    ("sketch_kmv_setops", SK.sketch_kmv_setops, SK.KMV_SETOPS_ORACLE_SQL),
+    ("search_snippet_topk", SRCH.search_snippet_topk, SRCH.SNIPPET_ORACLE_SQL),
+    ("search_proximity_topk", SRCH.search_proximity_topk, SRCH.PROX_ORACLE_SQL),
+    ("ann_hamming_recall", SIM.ann_hamming_recall, ORC.ann_hamming_recall()),
+    ("decontam_report", CU.decontam_report, ORC.decontam_report()),
+    ("tokenizer_vocab_coverage", TOK.tokenizer_vocab_coverage,
+     TOK.BPE_COVERAGE_ORACLE_SQL),
+    ("pipeline_gzip_roundtrip", RT.pipeline_gzip_roundtrip, RT.GZIP_ORACLE_SQL),
+    ("pipeline_sections", RT.pipeline_sections, RT.SECTIONS_ORACLE_SQL),
+    ("pipeline_table_roundtrip", RT.pipeline_table_roundtrip, RT.ORACLE_SQL),
+    ("stream_events_daily", SW.stream_events_daily, SW.STREAM_EVENTS_DAILY_ORACLE),
+    ("dedup_exact", D.dedup_exact, ORC.dedup_exact()),
+    ("dedup_simhash", D.dedup_simhash, ORC.dedup_simhash()),
+    ("text_dup_fraction", D.text_dup_fraction, ORC.text_dup_fraction()),
+    ("dedup_ngram_jaccard", D.dedup_ngram_jaccard, ORC.dedup_ngram_jaccard()),
+    ("dedup_embedding_cosine", D.dedup_embedding_cosine, ORC.dedup_embedding_cosine()),
+    ("dedup_embedding_lsh", SIM.dedup_embedding_lsh, ORC.dedup_embedding_lsh()),
+    ("ann_cosine_topk", SIM.ann_cosine_topk, ORC.ann_cosine_topk()),
+    ("ann_ivf_topk", SIM.ann_ivf_topk, ORC.ann_ivf_topk()),
+    ("q1_pricing_summary", R.q1_pricing_summary, R.Q1_ORACLE_SQL),
+    ("agg_keyword_score_argmax", R.agg_keyword_score_argmax,
+     R.KEYWORD_ARGMAX_ORACLE_SQL),
+    ("window_sessionize", R.window_sessionize, R.SESSIONIZE_ORACLE_SQL),
+    ("join_nation_region_rollup", R.join_nation_region_rollup,
+     R.NATION_REGION_ORACLE_SQL),
+    ("join_customer_orders", R.join_customer_orders, R.CUSTOMER_ORDERS_ORACLE_SQL),
+    ("agg_order_totals", R.agg_order_totals, R.ORDER_TOTALS_ORACLE_SQL),
+    ("events_daily_metrics", R.events_daily_metrics, R.EVENTS_DAILY_ORACLE_SQL),
+    ("agg_bool_checks", R.agg_bool_checks, R.BOOL_CHECKS_ORACLE_SQL),
+    ("window_running_spend", R.window_running_spend, R.RUNNING_SPEND_ORACLE_SQL),
+    ("join_semi_orders_with_items", R.join_semi_orders_with_items,
+     R.SEMI_ORDERS_ORACLE_SQL),
+    ("topk_parts_by_price", R.topk_parts_by_price, R.TOPK_PARTS_ORACLE_SQL),
+    ("window_top3_events_per_user", R.window_top3_events_per_user,
+     R.TOP3_EVENTS_ORACLE_SQL),
+    ("join_anti_customers_without_orders", R.join_anti_customers_without_orders,
+     R.ANTI_CUSTOMERS_ORACLE_SQL),
+    ("filter_events_window", R.filter_events_window, R.EVENTS_WINDOW_ORACLE_SQL),
+    ("filter_keyword_headers", R.filter_keyword_headers, R.KEYWORD_HEADERS_ORACLE_SQL),
+    ("f_date_normalize", R.f_date_normalize, R.DATE_NORMALIZE_ORACLE_SQL),
+    ("f_amount_normalize", R.f_amount_normalize, R.AMOUNT_NORMALIZE_ORACLE_SQL),
+    ("f_lang_detect", R.f_lang_detect, R.LANG_DETECT_ORACLE_SQL),
+    ("f_json_parse_fallback", R.f_json_parse_fallback, R.JSON_FALLBACK_ORACLE_SQL),
+    ("agg_first3_events_per_user", R.agg_first3_events_per_user,
+     R.FIRST3_EVENTS_ORACLE_SQL),
+    ("f_doc_type_case", R.f_doc_type_case, R.DOC_TYPE_CASE_ORACLE_SQL),
+    ("f_clamp_score", R.f_clamp_score, R.CLAMP_SCORE_ORACLE_SQL),
+    ("union_head_tail", R.union_head_tail, R.UNION_HEAD_TAIL_ORACLE_SQL),
+    ("orders_page2", R.orders_page2, R.ORDERS_PAGE2_ORACLE_SQL),
+    ("pipeline_docx_roundtrip", RDX.pipeline_docx_roundtrip, RDX.ORACLE_SQL),
+    ("search_bm25_topk", SRCH.search_bm25_topk, SRCH.BM25_ORACLE_SQL),
+    ("search_index_refresh", SRCH.search_index_refresh, SRCH.IDX_REFRESH_ORACLE_SQL),
+    ("tokenizer_bpe_pairs", TOK.tokenizer_bpe_pairs, TOK.BPE_ORACLE_SQL),
+    ("tokenizer_bpe_train", TOK.tokenizer_bpe_train, TOK.BPE_TRAIN_ORACLE_SQL),
+    ("sketch_quantiles_logbin", SK.sketch_quantiles_logbin, SK.QSKETCH_ORACLE_SQL),
+    ("ann_ivf_recall", SIM.ann_ivf_recall, ORC.ann_ivf_recall()),
+    ("ann_pq_topk", SIM.ann_pq_topk, SIM.PQ_ORACLE_SQL),
+    ("ann_pq_recall", SIM.ann_pq_recall, ORC.ann_pq_recall()),
+    ("quality_perplexity_unigram", QL.quality_perplexity_unigram,
+     QL.PERPLEXITY_ORACLE_SQL),
+    ("quality_perplexity_bigram", QL.quality_perplexity_bigram, QL.BIGRAM_ORACLE_SQL),
+    ("quality_perplexity_kn", QL.quality_perplexity_kn, QL.KN_ORACLE_SQL),
+    ("text_token_entropy", QL.text_token_entropy, QL.ENTROPY_ORACLE_SQL),
+    ("quality_classifier_nb", QL.quality_classifier_nb, QL.NB_ORACLE_SQL),
+    ("classifier_eval_pr", QL.classifier_eval_pr, QL.EVAL_PR_ORACLE_SQL),
+    ("sample_dsir_select", QL.sample_dsir_select, QL.DSIR_ORACLE_SQL),
+    ("dsir_eval_report", QL.dsir_eval_report, QL.DSIR_EVAL_ORACLE_SQL),
+    ("text_langid_ngram", TS.text_langid_ngram, TS.LANGID_NGRAM_ORACLE_SQL),
+    ("text_fix_mojibake", TS.text_fix_mojibake, TS.MOJIBAKE_ORACLE_SQL),
+    ("url_domain_etld1", TS.url_domain_etld1, TS.URL_ETLD1_ORACLE_SQL),
+    ("text_nfc_normalize", TS.text_nfc_normalize, TS.NFC_ORACLE_SQL),
+    ("sample_mix_epochs", CU.sample_mix_epochs, CU.MIX_EPOCHS_ORACLE_SQL),
+    ("stream_session_windows", SW.stream_session_windows,
+     SW.SESSION_WINDOWS_ORACLE_SQL),
+    ("pipeline_resume_snapshot", RT.pipeline_resume_snapshot,
+     RT.RESUME_SNAPSHOT_ORACLE_SQL),
+    ("pipeline_wet_roundtrip", RT.pipeline_wet_roundtrip, RT.WET_ORACLE_SQL),
+    ("warc_cdx_index", RT.warc_cdx_index, RT.CDX_ORACLE_SQL),
+    ("extract_outlinks", LNK.extract_outlinks, LNK.OUTLINKS_ORACLE_SQL),
+    ("anchor_text_index", LNK.anchor_text_index, LNK.ANCHOR_INDEX_ORACLE_SQL),
+    ("filter_robots_gate", LNK.filter_robots_gate, LNK.ROBOTS_ORACLE_SQL),
+    ("crawl_delta_report", D.crawl_delta_report, ORC.crawl_delta_report()),
+    ("crawl_frontier_topk", LNK.crawl_frontier_topk, LNK.FRONTIER_ORACLE_SQL),
+    ("crawl_schedule_waves", LNK.crawl_schedule_waves, LNK.SCHEDULE_ORACLE_SQL),
+    ("sitemap_discover", LNK.sitemap_discover, LNK.SITEMAP_ORACLE_SQL),
+    ("catalog_compact_roundtrip", RT.catalog_compact_roundtrip, RT.COMPACT_ORACLE_SQL),
+    ("pipeline_metrics_report", RT.pipeline_metrics_report,
+     RT.METRICS_REPORT_ORACLE_SQL),
+    ("mm_image_features", MM.mm_image_features_q, ORC.mm_image_features()),
+    ("mm_frame_sample", MM.mm_frame_sample_q, ORC.mm_frame_sample()),
+    ("mm_audio_stats", MM.mm_audio_stats_q, ORC.mm_audio_stats()),
+    ("dedup_connected_components", D.dedup_connected_components,
+     ORC.dedup_connected_components()),
+    ("dedup_lsh_recall", D.dedup_lsh_recall, ORC.dedup_lsh_recall()),
+    ("dedup_minhash_keep_canonical", CU.dedup_minhash_keep_canonical,
+     ORC.dedup_minhash_keep_canonical()),
+    ("search_keyword_topk", SRCH.search_keyword_topk, SRCH.SEARCH_ORACLE_SQL),
+    ("pipeline_main_text", RT.pipeline_main_text, RT.MAIN_TEXT_ORACLE_SQL),
+    ("pipeline_xlsx_roundtrip", RX.pipeline_xlsx_roundtrip, RX.ORACLE_SQL),
+    ("text_token_stats", TS.text_token_stats, ORC.text_token_stats()),
+    ("text_quality_scores", TS.text_quality_scores, ORC.text_quality_scores()),
+    ("text_langid", TS.text_langid, ORC.text_langid()),
+    ("text_fingerprint", TS.text_fingerprint, ORC.text_fingerprint()),
+    ("text_line_dedup", TS.text_line_dedup, ORC.text_line_dedup()),
+    ("url_canonicalize", TS.url_canonicalize, ORC.url_canonicalize()),
+    ("quality_filter_gopher", TS.quality_filter_gopher, ORC.quality_filter_gopher()),
+    ("agg_column_profile", R.agg_column_profile, R.COLUMN_PROFILE_ORACLE_SQL),
+    ("agg_rollup_category", R.agg_rollup_category, R.ROLLUP_CATEGORY_ORACLE_SQL),
+    ("sniff_roundtrip", PG.sniff_roundtrip, PG.SNIFF_ORACLE_SQL),
+    ("stream_events_daily_append", SW.stream_events_daily_append,
+     SW.STREAM_EVENTS_DAILY_APPEND_ORACLE),
+    ("pipeline_xls_roundtrip", RXL.pipeline_xls_roundtrip, RXL.ORACLE_SQL),
+    ("stream_stateful_domain_counts", SS.stream_stateful_domain_counts,
+     SS.stateful_oracle_sql()),
+    ("text_unigram_rarity", TS.text_unigram_rarity, ORC.text_unigram_rarity()),
+    ("quality_filter_c4", TS.quality_filter_c4, ORC.quality_filter_c4()),
+    ("dedup_url_keep_first", D.dedup_url_keep_first, ORC.dedup_url_keep_first()),
+    ("stream_dedup_urls", SI.stream_dedup_urls, SI.STREAM_DEDUP_URLS_ORACLE),
+    ("dedup_substring_spans", D.dedup_substring_spans, ORC.dedup_substring_spans()),
+    ("agg_domain_stats", TS.agg_domain_stats, ORC.agg_domain_stats()),
+    ("quality_filter_gopher_rep", TS.quality_filter_gopher_rep,
+     ORC.quality_filter_gopher_rep()),
+    ("decontam_ngram_overlap", CU.decontam_ngram_overlap, ORC.decontam_ngram_overlap()),
+    ("sample_domain_cap", CU.sample_domain_cap, ORC.sample_domain_cap()),
+    ("dedup_lines_global", CU.dedup_lines_global, ORC.dedup_lines_global()),
+    ("sample_token_budget", CU.sample_token_budget, ORC.sample_token_budget()),
+    ("curation_funnel", CU.curation_funnel, ORC.curation_funnel()),
+    ("filter_bloom_blocklist", CU.filter_bloom_blocklist, ORC.filter_bloom_blocklist()),
+    ("agg_length_percentiles", SK.agg_length_percentiles, SK.PERCENTILE_ORACLE_SQL),
+    ("sample_stratified_split", SK.sample_stratified_split, SK.SPLIT_ORACLE_SQL),
+    ("sketch_distinct_hll", SK.sketch_distinct_hll, SK.HLL_ORACLE_SQL),
+    ("sample_temperature_mix", CU.sample_temperature_mix,
+     CU.TEMPERATURE_MIX_ORACLE_SQL),
+    ("sketch_heavy_hitters_cms", SK.sketch_heavy_hitters_cms, SK.CMS_ORACLE_SQL),
+    ("pipeline_domain_report", RT.pipeline_domain_report, RT.DOMAIN_REPORT_ORACLE_SQL),
+    ("sample_pack_sequences", CU.sample_pack_sequences, ORC.sample_pack_sequences()),
+    ("embedding_label_outliers", SIM.embedding_label_outliers,
+     ORC.embedding_label_outliers()),
+    ("text_chunk_windows", TS.text_chunk_windows, ORC.text_chunk_windows()),
+    ("agg_cube_status_priority", R.agg_cube_status_priority, R.CUBE_STATUS_ORACLE_SQL),
+    ("join_asof_orders", TP.join_asof_orders, TP.ASOF_ORACLE_SQL),
+    ("range_join_event_pairs", TP.range_join_event_pairs, TP.RANGE_ORACLE_SQL),
+    ("sketch_distinct_kmv", SK.sketch_distinct_kmv, SK.KMV_ORACLE_SQL),
+    ("sample_hash_stable", SK.sample_hash_stable, SK.SAMPLE_ORACLE_SQL),
+]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Ordering = the r5 rotation, applied by _R5_WINDOW at the end of
-    this function (the dict literal below keeps its r4 grouping and
-    per-entry commentary; the explicit list is what the driver sees).
-
-    The driver's correctness harness evaluates the FIRST 50 entries.
-    Rotation policy, applied per round:
-      tier 1 — every entry whose implementation OR oracle changed this
-               round, plus entries with no driver row yet;
-      tier 2 — the stalest green entries (last driver row oldest) fill
-               the remaining window slots;
-      tier 3 — freshly-proven entries (green last round) sit behind the
-               truncation line, where ageing is bounded by tier 2's
-               fill next round.
-
-    r5 instantiation (the plan VERDICT r4 "Next round" #2 queued;
-    the membership enumerated below is the MID-ROUND state — the
-    "Final r5 batch" paragraph at the end records the four late
-    swap-ins and their displacements, and _R5_WINDOW itself is
-    authoritative):
-    tier 1 = 16 changed-or-new (mm_ocr_text, ann_rrf_hybrid,
-    ann_ivf_pq_topk, ann_ivf_pq_recall, decontam_minhash,
-    mm_image_ahash, text_readability, graph_salsa NEW;
-    text_pii_scrub gained the Luhn/IP/id classes; embedding_kmeans
-    moved to the broadcast-table argmin; pagerank_link_graph dropped
-    the per-round checkpoint; dedup_minhash_lsh + dedup_incremental_lsh
-    build their indexes eagerly now; tokenizer_bpe_encode +
-    tokenizer_vocab_coverage share the re-tupled _encoded_word_counts
-    cache; search_rrf_fusion was refactored through _rrf_fuse)
-    + 7 late-r5 additions (dedup_semdedup, decontam_embedding,
-    ann_hamming_topk, ann_hamming_recall, stream_join_attribution,
-    quality_filter_fineweb, decontam_report)
-    + the 3 entries that have NEVER had a driver row
-    (stream_quantiles_logbin, dedup_lsh_exact_reps,
-    url_domain_etld1_dim), + the 2 displaced r2-row binary roundtrips
-    (pipeline_pdf_roundtrip, pipeline_warc_roundtrip) + the 2 r4
-    tier-1 overflows (dedup_embedding_keep_canonical,
-    pipeline_invoice_roundtrip) + the 9 newest additions
-    (search_phrase_topk, search_proximity_topk, search_snippet_topk,
-    collocations_pmi, dedup_bloom_probe, search_query_expansion,
-    search_spell_suggest, graph_triangle_count,
-    sketch_hll_merge_shards, text_zipf_fit, text_keyphrases,
-    langid_eval_confusion, search_autocomplete,
-    text_winnow_fingerprints, dedup_winnow_pairs,
-    graph_degree_powerlaw, mm_video_scene_cut, mm_audio_vad,
-    events_funnel, events_retention, events_markov_transitions) = 50
-    (tokenizer_vocab_coverage displaced — its r5 delta is the
-    value-neutral encode-cache tuple and tokenizer_bpe_encode, still
-    in-window, exercises the same path).
-    Final r5 batch: graph_kcore, sketch_kmv_intersect,
-    events_anomaly_mad and rfm_customer_segments enter at the window
-    head (new code first); search_proximity_topk, ann_hamming_recall,
-    decontam_report and search_snippet_topk rotate out — each a twin
-    whose changed path an in-window sibling still drives (see the
-    _R5_NEXT head notes). stream_anomaly_mad sits at position 51:
-    its oracle is the in-window events_anomaly_mad SQL verbatim and
-    pytest pins stream==batch row equality.
-    Tier 2 = 0 this round — the 15 newest additions filled the window;
-    all 36 r1/r2-row entries queue in _R5_NEXT,
-    stalest first. The 37 slices that did not fit
-    (tokenizer_vocab_coverage, pipeline_gzip_roundtrip,
-    pipeline_sections, pipeline_table_roundtrip, stream_events_daily,
-    dedup_exact, dedup_simhash, text_dup_fraction, dedup_ngram_jaccard,
-    dedup_embedding_cosine, dedup_embedding_lsh,
-    ann_cosine_topk, ann_ivf_topk, q1_pricing_summary,
-    agg_keyword_score_argmax,
-    window_sessionize, join_nation_region_rollup,
-    window_running_spend, join_semi_orders_with_items,
-    topk_parts_by_price,
-    window_top3_events_per_user, join_anti_customers_without_orders,
-    filter_events_window, filter_keyword_headers,
-    f_date_normalize, f_amount_normalize, f_lang_detect,
-    f_json_parse_fallback, agg_first3_events_per_user, f_doc_type_case,
-    f_clamp_score, union_head_tail, orders_page2 — pure projections
-    unchanged since r1/r2, local-sweep green — the names above are the
-    headline members; _R5_NEXT is the authoritative full order) sit at
-    positions 51-87;
-    every other entry has an r3 or r4 green row.
-    (The r4 instantiation this replaces is recorded in git history;
-    the dict literal below still carries its r4 tier grouping comments,
-    which _R5_WINDOW supersedes.)
-    """
-    q: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-        # ================= tier 1: changed or new in r4 =================
-        # Word documents: zip sniff -> word/document.xml paragraphs +
-        # body tables + core props with byte spans (new in r4 — fills
-        # the reference's pinned-but-unused python-docx branch)
-        "pipeline_docx_roundtrip": RDX.pipeline_docx_roundtrip,
-        # full BM25 (k1/b + Lucene idf) via the integer-log table trick
-        # proven in sketch_distinct_hll — length normalization with a
-        # bit-exact DuckDB twin, zero extra shuffles (new in r4)
-        "search_bm25_topk": SRCH.search_bm25_topk,
-        # reciprocal-rank fusion of the tf-idf and BM25 top-K lists —
-        # integer-scaled RRF, consensus count per doc (new in r4d)
-        "search_rrf_fusion": SRCH.search_rrf_fusion,
-        # hybrid retrieval: BM25 lexical list fused with the PQ-ADC
-        # ANN list through the same integer RRF — the 100-TB shape
-        # search_rrf_fusion's docstring promised (new in r5)
-        "ann_rrf_hybrid": SRCH.ann_rrf_hybrid,
-        # incremental inverted-index refresh: persisted base postings +
-        # increment-only scan, merged df/N, top-K under the refreshed
-        # idf == batch rebuild (the twin IS the rebuild) (new in r4d)
-        "search_index_refresh": SRCH.search_index_refresh,
-        # exact-phrase retrieval over a memoized positional index:
-        # anchor-join (pos - offset) match, phrase tf * integer idf
-        # (new in r5)
-        "search_phrase_topk": SRCH.search_phrase_topk,
-        # result-page snippet generation: token window around the first
-        # exact phrase occurrence, broadcast hit-list doc-store lookup
-        # (new in r5)
-        "search_snippet_topk": SRCH.search_snippet_topk,
-        # proximity "near" operator: term-pair co-occurrence within a
-        # token window over the same positional postings, ranked by
-        # in-window pair count then tightest distance (new in r5)
-        "search_proximity_topk": SRCH.search_proximity_topk,
-        # pseudo-relevance-feedback query expansion: BM25 top-K as the
-        # feedback set, expansion terms by feedback-tf x integer idf,
-        # everything past the ranker feedback-bounded (new in r5)
-        "search_query_expansion": SRCH.search_query_expansion,
-        # SymSpell spell suggestion: deletion-neighborhood equi-join
-        # over the Heaps-bounded vocab index, levenshtein verify on
-        # candidates only (new in r5)
-        "search_spell_suggest": SRCH.search_spell_suggest,
-        # tokenizer-training corpus primitive: BPE merge-pair counts
-        # over the deduplicated vocabulary, corpus read once (new in r4)
-        "tokenizer_bpe_pairs": TOK.tokenizer_bpe_pairs,
-        # full iterative BPE training: BPE_ROUNDS greedy merge rounds,
-        # fold-merge JVM-side, twin replays merges with replace-first
-        # recursive CTEs (new in r4)
-        "tokenizer_bpe_train": TOK.tokenizer_bpe_train,
-        # the encode half of the tokenizer story: the trained merge
-        # table applied per document — distinct words fold once
-        # (Heaps-law sublinear), lengths join back Zipf-skew-split,
-        # per-doc token counts + chars/token compression (new in r4)
-        "tokenizer_bpe_encode": TOK.tokenizer_bpe_encode,
-        # per-language fertility/compression/fragmentation report under
-        # the trained tokenizer — the multilingual merge-budget
-        # acceptance gate (new in r4d)
-        "tokenizer_vocab_coverage": TOK.tokenizer_vocab_coverage,
-        # mergeable log-binned quantile sketch — the constant-state
-        # percentile path next to the exact agg_length_percentiles;
-        # bit-exact integer binning both engines (new in r4d)
-        "sketch_quantiles_logbin": SK.sketch_quantiles_logbin,
-        # Dolma-style Bloom-filter dedup membership: crawl increment
-        # probes a mergeable bit_or bitmap over the base corpus'
-        # fingerprints, exact leg measures the FPR (new in r5)
-        "dedup_bloom_probe": SK.dedup_bloom_probe,
-        # HLL mergeability as a value-checked witness: per-shard
-        # registers merged by max must equal the direct single-pass
-        # registers exactly (new in r5)
-        "sketch_hll_merge_shards": SK.sketch_hll_merge_shards,
-        # theta-sketch set intersection over per-source shingle sets —
-        # KMV algebra with the exact intersection as the measured
-        # witness (new in r5, final batch)
-        "sketch_kmv_intersect": SK.sketch_kmv_intersect,
-        # the rest of the theta algebra: union + both aNotB estimates
-        # over the same sketches, exact sample-count identity emitted
-        # as a checked bit (new in r5, final batch)
-        "sketch_kmv_setops": SK.sketch_kmv_setops,
-        # k-core decomposition of the link graph — Batagelj-Zaversnik
-        # peel as bounded localCheckpoint rounds; fixed-depth
-        # MATERIALIZED-CTE twin (new in r5, final batch)
-        "graph_kcore": G.graph_kcore,
-        # robust daily-volume anomaly detection — nearest-rank
-        # median/MAD Hampel rule, integer e6 z-scores (new in r5,
-        # final batch)
-        "events_anomaly_mad": TP.events_anomaly_mad,
-        # measured IVF recall@K vs the exact baseline — the number the
-        # 100x-scale N_PROBE tuning conversation needs (new in r4)
-        "ann_ivf_recall": SIM.ann_ivf_recall,
-        # binary sign-quantization ANN: integer XOR+popcount Hamming
-        # scan over the memoized 8-byte code table, exact-cosine rerank
-        # of BQ_CAND candidates — the memory tier below PQ (new in r5)
-        "ann_hamming_topk": SIM.ann_hamming_topk,
-        # the BQ honesty number, mirroring ann_ivf_recall (new in r5)
-        "ann_hamming_recall": SIM.ann_hamming_recall,
-        # real Lloyd k-means: driver-side bounded centroids, map-only
-        # assignment, integer floor-div updates, per-round inertia
-        # (new in r4)
-        "embedding_kmeans": SIM.embedding_kmeans,
-        # product-quantization ANN: Lloyd-trained per-subspace
-        # codebooks, map-only encoding, broadcast ADC lookup tables,
-        # order-free integer distance sums (new in r4)
-        "ann_pq_topk": SIM.ann_pq_topk,
-        # PQ's honesty number as a driver-checked value, mirroring
-        # ann_ivf_recall (new in r4)
-        "ann_pq_recall": SIM.ann_pq_recall,
-        # IVFADC: the IVF coarse quantizer prunes to the probed lists,
-        # PQ/ADC scores only those lists' codes — the production
-        # trillion-vector composition of the two paths above; the
-        # memoized lists frame is FAISS's IVFPQ storage layout
-        # (new in r5)
-        "ann_ivf_pq_topk": SIM.ann_ivf_pq_topk,
-        # IVFADC's measured recall@K vs exact — per-query bounded above
-        # by the coarse path's recall, pinned by test (new in r5)
-        "ann_ivf_pq_recall": SIM.ann_ivf_pq_recall,
-        # CCNet-style unigram-LM perplexity gate: hash-stable 20% train
-        # slice, integer-ln cross-entropy, exact nearest-rank tertile
-        # head/middle/tail buckets (new in r4)
-        "quality_perplexity_unigram": QL.quality_perplexity_unigram,
-        # bigram-LM cross-entropy — one Markov order closer to CCNet's
-        # KenLM; both Zipf-keyed join-backs skew-split (new in r4)
-        "quality_perplexity_bigram": QL.quality_perplexity_bigram,
-        # interpolated Kneser-Ney on the same bigram tables — KenLM-
-        # grade smoothing as exact integer fractions (d=3/4 rational),
-        # absolute discount + continuation backoff (new in r4)
-        "quality_perplexity_kn": QL.quality_perplexity_kn,
-        # within-doc unigram entropy (Gopher/Dolma degenerate-text
-        # signal), bit-exact via the same integer-ln table (new in r4)
-        "text_token_entropy": QL.text_token_entropy,
-        # DCLM-style LEARNED quality classifier: multinomial NB trained
-        # on provenance labels, integer log-likelihood-ratio score, no
-        # truncating division on negatives (new in r4)
-        "quality_classifier_nb": QL.quality_classifier_nb,
-        # PMI collocation mining over the one-scan bigram pair table —
-        # the phrase-vocabulary-induction pass (integer-ln PMI, support
-        # floor, survivors-only marginal joins) (new in r5)
-        "collocations_pmi": QL.collocations_pmi,
-        # per-source Zipf exponent by integer-exact OLS over the
-        # top-64 rank/frequency log-log points (new in r5)
-        "text_zipf_fit": QL.text_zipf_fit,
-        # per-document TF-IDF keyphrase top-K — skew-split tf⋈df
-        # join-back, WindowGroupLimit per doc (new in r5)
-        "text_keyphrases": QL.text_keyphrases,
-        # trained-langid confusion matrix with integer-exact per-cell
-        # precision/recall against gold labels (new in r5)
-        "langid_eval_confusion": TS.langid_eval_confusion,
-        # prefix→top-K completion index over the vocabulary (the
-        # MostPopularCompletion QAC baseline) (new in r5)
-        "search_autocomplete": SRCH.search_autocomplete,
-        # MOSS winnowing fingerprints — per-window rightmost-min over
-        # k-gram hashes, zero-shuffle array plan (new in r5)
-        "text_winnow_fingerprints": TS.text_winnow_fingerprints,
-        # local-similarity near-dup pairs via shared winnowing
-        # fingerprints with the MOSS stop-fingerprint cap (new in r5)
-        "dedup_winnow_pairs": D.dedup_winnow_pairs,
-        # in-degree power-law exponent over the pinned link graph —
-        # the graph-side sibling of text_zipf_fit (new in r5)
-        "graph_degree_powerlaw": G.graph_degree_powerlaw,
-        # shot-boundary detection over the Y4M frame walk — adjacent-
-        # frame SAD with a measured threshold (new in r5)
-        "mm_video_scene_cut": MM.mm_video_scene_cut_q,
-        # energy-VAD segmentation over the WAV PCM — windows, rising-
-        # edge segment count, measured threshold (new in r5)
-        "mm_audio_vad": MM.mm_audio_vad_q,
-        # ordered view→click→purchase conversion funnel with
-        # strictly-after semantics (new in r5)
-        "events_funnel": R.events_funnel,
-        # weekly retention cohort matrix — ISO-week cohorts, exact
-        # day-diff offsets, e6 retention vs week-0 size (new in r5)
-        "events_retention": R.events_retention,
-        # event-type transition matrix — one user-keyed lag window,
-        # |types|²-bounded aggregate, e6 row probabilities (new in r5)
-        "events_markov_transitions": R.events_markov_transitions,
-        # RFM quintile segmentation over the orders fact table — the
-        # warehouse customer-value rollup; rank-based tie-sharing
-        # scores, integer quintile arithmetic (new in r5, final batch)
-        "rfm_customer_segments": R.rfm_customer_segments,
-        # held-out PR/F1 sweep over a fixed threshold grid — the
-        # measured operating curve for the learned gate (new in r4)
-        "classifier_eval_pr": QL.classifier_eval_pr,
-        # DSIR-shaped selection: hashed n-gram buckets make the whole
-        # model a broadcast DSIR_B-row table — shuffle-free scoring,
-        # exact tie-broken keep quota (new in r4)
-        "sample_dsir_select": QL.sample_dsir_select,
-        # per-source kept fraction + target-enrichment factor — the
-        # measured number that says the resampling moved the mixture
-        # toward the target (new in r4)
-        "dsir_eval_report": QL.dsir_eval_report,
-        # TRAINED Cavnar-Trenkle n-gram language ID over all five gold
-        # labels, integer rank distances (new in r4)
-        "text_langid_ngram": TS.text_langid_ngram,
-        # ftfy-style mojibake detect+repair: UTF-8-read-as-latin-1
-        # signature, byte-exact inverse transcode (new in r4)
-        "text_fix_mojibake": TS.text_fix_mojibake,
-        # registrable-domain (eTLD+1) extraction under PSL longest-match
-        # semantics — the unit C4/RefinedWeb cap and mix by; pure
-        # codegen projection, suffix table as broadcast-able literal
-        # (new in r4)
-        "url_domain_etld1": TS.url_domain_etld1,
-        # Unicode NFC canonicalization — Spark has no normalize
-        # builtin, so this is a sanctioned Arrow-batched mapInPandas
-        # (stdlib unicodedata) vs DuckDB's utf8proc nfc_normalize;
-        # decomposed fixture prefixes make every class fire (new in r4)
-        "text_nfc_normalize": TS.text_nfc_normalize,
-        # the data-repetition schedule (epochs per source under a
-        # smoothed token budget, LLaMA-table shape) (new in r4)
-        "sample_mix_epochs": CU.sample_mix_epochs,
-        # native Structured Streaming session windows, append-drained
-        # with a sentinel flush; twin is the independent islands
-        # construction (new in r4)
-        "stream_session_windows": SW.stream_session_windows,
-        # stream-stream interval join (the attribution shape) — the
-        # last Structured Streaming join surface (new in r5)
-        "stream_join_attribution": SW.stream_join_attribution,
-        # snapshot-atomic resume value-checked: three runs against a
-        # growing pages dir — anti-join resume, idempotent no-op third
-        # run, lineage run_ids through the manifest (new in r4)
-        "pipeline_resume_snapshot": RT.pipeline_resume_snapshot,
-        # the publish side of the crawl loop: extraction exported as
-        # WET conversion records (pure-SQL writer), re-ingested through
-        # the kernel record walker, byte-identical canon (new in r4)
-        "pipeline_wet_roundtrip": RT.pipeline_wet_roundtrip,
-        # the CDX capture index over the WET export: per-record byte
-        # offset + length via a bucket-keyed running sum — one ranged
-        # read per page instead of a stream scan (new in r4)
-        "warc_cdx_index": RT.warc_cdx_index,
-        # the WAT side: passive anchor recorder in the HTML kernel —
-        # every href form resolved RFC-3986-style against the page url,
-        # chrome links included (new in r4)
-        "extract_outlinks": LNK.extract_outlinks,
-        # per-target in-link volume + dominant anchor text — the WAT
-        # aggregation behind anchor-text retrieval (new in r4)
-        "anchor_text_index": LNK.anchor_text_index,
-        # robots.txt politeness gate over the discovered frontier:
-        # generic parse + Google-spec longest-match, broadcast rules,
-        # shuffle-free probe; twin rebuilds verdicts by arithmetic
-        # (new in r4)
-        "filter_robots_gate": LNK.filter_robots_gate,
-        # re-crawl change detection: fingerprint-keyed full outer
-        # join over two crawl snapshots -> unchanged/changed/gone/new
-        # verdicts that decide which fraction re-runs the kernels
-        # (new in r4)
-        "crawl_delta_report": D.crawl_delta_report,
-        # the crawl-loop capstone: discovered targets -> robots gate ->
-        # seen anti-join -> in-link-ranked next wave; composes three
-        # oracle-checked ops, composition itself value-checked
-        # (new in r4)
-        "crawl_frontier_topk": LNK.crawl_frontier_topk,
-        # politeness scheduling: gated unseen candidates assigned fetch
-        # waves capped at WAVE_PER_HOST per host per wave — one window
-        # PARTITIONED BY HOST, no global sort (new in r4)
-        "crawl_schedule_waves": LNK.crawl_schedule_waves,
-        # the other discovery channel: per-source sitemap urlsets built
-        # from the corpus and parsed back (roundtrip contract), new
-        # URLs flagged, recrawl ranked by lastmod recency (new in r4)
-        "sitemap_discover": LNK.sitemap_discover,
-        # snapshot compaction (small-files maintenance): N incremental
-        # appends rewritten to one snapshot in one atomic commit,
-        # lineage preserved, content + resume backlog value-checked
-        # (new in r4)
-        "catalog_compact_roundtrip": RT.catalog_compact_roundtrip,
-        # the north rule's lineage/metrics table value-checked: metrics
-        # re-keyed on the deterministic size-bucket half of the skew
-        # key x content kind, two injected fault families (new in r4)
-        "pipeline_metrics_report": RT.pipeline_metrics_report,
-        # multimodal: REWRITTEN in r4 to decode real containers (BMP
-        # 8bpp palettized incl. bottom-up rows, RIFF/WAV PCM with junk
-        # chunks, YUV4MPEG2) — synthetic TAG headers retired
-        "mm_image_features": MM.mm_image_features_q,
-        # perceptual image near-dup: integer average-hash over the
-        # decoded pixel grid, exact-bucket collapse with a canonical
-        # keep/drop verdict — dedup_exact's shape on the multimodal
-        # column (new in r5)
-        "mm_image_ahash": MM.mm_image_ahash,
-        "mm_frame_sample": MM.mm_frame_sample_q,
-        "mm_audio_stats": MM.mm_audio_stats_q,
-        # image -> TEXT recovery: the reference's declared-never-built
-        # OCR branch filled — 5x7 bitmap-font render into the real
-        # BMP/PNG containers, decoded back by template matching; the
-        # recovered text must hash-match the source (new in r5)
-        "mm_ocr_text": MM.mm_ocr_text_q,
-        # pointer-doubling components + banded LSH: the r3 rewrite's
-        # only direct driver rows tested the OLD code (VERDICT r3
-        # What's-wrong #1), and the r4 Pregel co-partition pin changed
-        # the iteration again — both MUST be inside the window
-        "dedup_connected_components": D.dedup_connected_components,
-        "dedup_minhash_lsh": D.dedup_minhash_lsh,
-        # the honesty number for the LSH family (same play as
-        # ann_ivf_recall): measured recall vs the exhaustive
-        # inverted-index ground truth + candidate precision (new in r4)
-        "dedup_lsh_recall": D.dedup_lsh_recall,
-        # Pregel co-partition pin changed the iteration body (r4)
-        "pagerank_link_graph": G.pagerank_link_graph,
-        # SALSA hub/authority (degree-normalized HITS): per-edge
-        # integer DIV is the normalization, mass bounded forever,
-        # two-sided Pregel co-partition pin (new in r5)
-        "graph_salsa": G.graph_salsa,
-        # Newman degree-mixing coefficient in its rational symmetric
-        # form — integer sums, sign-split e6 division, no sqrt (new in
-        # r5, final batch)
-        "graph_assortativity": G.graph_assortativity,
-        # host-graph compression: doc edges -> (src_host, dst_host)
-        # weights + distinct linking docs (new in r5, final batch)
-        "graph_host_edges": G.graph_host_edges,
-        # personalized PageRank — seed-only teleport over the same
-        # pinned edges; rank concentrates near seeds, non-reachable
-        # nodes stay at exact 0 (new in r5, final batch)
-        "graph_ppr_seeds": G.graph_ppr_seeds,
-        # per-node triangle counts + clustering coefficient via the
-        # degree-oriented closure: exchange-free wedge self-join on the
-        # cached lo-pinned orientation, O(m^1.5) wedges (new in r5)
-        "graph_triangle_count": G.graph_triangle_count,
-        # composition that executes the changed components path
-        "dedup_minhash_keep_canonical": CU.dedup_minhash_keep_canonical,
-        # search.py gained shared BM25 helpers this round
-        "search_keyword_topk": SRCH.search_keyword_topk,
-        # kernels/html.py sniff_kind gained the docx zip branch (r4):
-        # the dispatch every page crosses, plus the xlsx zip path it
-        # rewrote
-        "pipeline_main_text": _pipeline_main_text,
-        "pipeline_xlsx_roundtrip": RX.pipeline_xlsx_roundtrip,
-        # -- the driver's 50-entry truncation line falls HERE --
-        # ========= tier 1 overflow (r3-green, indirectly covered) =======
-        # the SemDeDup composition's own logic is unchanged in r4; its
-        # r4 delta (the shared pointer-doubling labels helper) is
-        # exercised in-window by dedup_connected_components +
-        # dedup_minhash_keep_canonical, and its r3 driver row is green
-        "dedup_embedding_keep_canonical": CU.dedup_embedding_keep_canonical,
-        # r3-green; its r4 delta (kernels/fields.py label table gained
-        # docx rows) is directly tested in-window by
-        # pipeline_docx_roundtrip — the invoice-specific spans are
-        # unchanged since its green r3 row
-        "pipeline_invoice_roundtrip": RF.pipeline_invoice_roundtrip,
-        # new in r4d but born past the full window: the quantile sketch
-        # maintained as streaming state (3 arrival files, complete-mode
-        # bin histogram), decode == the batch sketch, SAME oracle SQL;
-        # locally driver-strength green + pytest-pinned equal to the
-        # batch op — leads r5's rotation with the pdf/warc roundtrips
-        "stream_quantiles_logbin": SW.stream_quantiles_logbin,
-        # the MAD anomaly rule over a continuously-maintained
-        # complete-mode daily count — batch==stream equality is the
-        # checked contract: the oracle is the batch twin's SQL
-        # verbatim (new in r5, final batch)
-        "stream_anomaly_mad": SW.stream_anomaly_mad,
-        # r4d, also past the window: the hot-bucket graduation path
-        # (exact dedup first, LSH over one rep per exact group, star
-        # edges restored) — labeling proven equal to plain
-        # LSH+components, so its oracle IS the components twin
-        "dedup_lsh_exact_reps": D.dedup_lsh_exact_reps,
-        # r4d: the eTLD+1 suffix table as a broadcast DIMENSION (the
-        # full-PSL plan shape); output row-identical to the literal
-        # variant, so its oracle IS the literal variant's twin
-        "url_domain_etld1_dim": TS.url_domain_etld1_dim,
-        # =========== tier 3: stalest green (driver row = r2) ===========
-        # binary-container pipelines first (highest-complexity paths)
-        "pipeline_pdf_roundtrip": RP.pipeline_pdf_roundtrip,
-        "pipeline_warc_roundtrip": RT.pipeline_warc_roundtrip,
-        # (the eight tier-1 inserts this session — bpe_encode,
-        # lsh_recall, etld1, pq_recall, schedule_waves, sitemap,
-        # nfc, perplexity_kn — pushed gzip/sections/table_roundtrip/
-        # stream_events_daily and the r2-stale dedup quartet out; they
-        # lead the r5 rotation)
-        "pipeline_gzip_roundtrip": RT.pipeline_gzip_roundtrip,
-        "pipeline_sections": RT.pipeline_sections,
-        "pipeline_table_roundtrip": RT.pipeline_table_roundtrip,
-        "stream_events_daily": _stream_events_daily,
-        # dedup family (unchanged since r2 but two rounds stale)
-        "dedup_exact": D.dedup_exact,
-        "dedup_simhash": D.dedup_simhash,
-        "text_dup_fraction": D.text_dup_fraction,
-        "dedup_ngram_jaccard": D.dedup_ngram_jaccard,
-        "dedup_embedding_cosine": D.dedup_embedding_cosine,
-        "dedup_embedding_lsh": SIM.dedup_embedding_lsh,
-        "ann_cosine_topk": SIM.ann_cosine_topk,
-        "ann_ivf_topk": SIM.ann_ivf_topk,
-        # relational core, r2-stale
-        "q1_pricing_summary": R.q1_pricing_summary,
-        "agg_keyword_score_argmax": R.agg_keyword_score_argmax,
-        "window_running_spend": R.window_running_spend,
-        "window_sessionize": R.window_sessionize,
-        "join_nation_region_rollup": R.join_nation_region_rollup,
-        "join_customer_orders": R.join_customer_orders,
-        "agg_order_totals": R.agg_order_totals,
-        # ====== tier 3: behind the truncation line (position 51+) ======
-        # r2 leftovers nearest the line — r5 rotation picks these first
-        "events_daily_metrics": R.events_daily_metrics,
-        "agg_bool_checks": R.agg_bool_checks,
-        "join_semi_orders_with_items": R.join_semi_orders_with_items,
-        "join_anti_customers_without_orders": R.join_anti_customers_without_orders,
-        "topk_parts_by_price": R.topk_parts_by_price,
-        "window_top3_events_per_user": R.window_top3_events_per_user,
-        "filter_events_window": R.filter_events_window,
-        "filter_keyword_headers": R.filter_keyword_headers,
-        "f_date_normalize": R.f_date_normalize,
-        "f_amount_normalize": R.f_amount_normalize,
-        "f_lang_detect": R.f_lang_detect,
-        "f_json_parse_fallback": R.f_json_parse_fallback,
-        "agg_first3_events_per_user": R.agg_first3_events_per_user,
-        "f_clamp_score": R.f_clamp_score,
-        "f_doc_type_case": R.f_doc_type_case,
-        "union_head_tail": R.union_head_tail,
-        "orders_page2": R.orders_page2,
-        # everything below earned a fresh green driver row in r3
-        "text_token_stats": TS.text_token_stats,
-        "text_quality_scores": TS.text_quality_scores,
-        # Flesch-Kincaid readability as exact e4 fixed-point (per-term
-        # integer floors, DIV == //), scan-speed projection (new in r5)
-        "text_readability": TS.text_readability,
-        "text_langid": TS.text_langid,
-        "text_fingerprint": TS.text_fingerprint,
-        "text_pii_scrub": TS.text_pii_scrub,
-        "text_line_dedup": TS.text_line_dedup,
-        "url_canonicalize": TS.url_canonicalize,
-        "quality_filter_gopher": TS.quality_filter_gopher,
-        # FineWeb custom filters (Penedo et al. 2024 §3.5) — the three
-        # line-structural rules on top of C4/Gopher (new in r5)
-        "quality_filter_fineweb": TS.quality_filter_fineweb,
-        "agg_column_profile": R.agg_column_profile,
-        "agg_rollup_category": R.agg_rollup_category,
-        "sniff_roundtrip": PG.sniff_roundtrip,
-        "stream_events_daily_append": SW.stream_events_daily_append,
-        "pipeline_xls_roundtrip": RXL.pipeline_xls_roundtrip,
-        "stream_stateful_domain_counts": SS.stream_stateful_domain_counts,
-        "text_unigram_rarity": TS.text_unigram_rarity,
-        "quality_filter_c4": TS.quality_filter_c4,
-        "dedup_url_keep_first": D.dedup_url_keep_first,
-        "stream_dedup_urls": SI.stream_dedup_urls,
-        "dedup_substring_spans": D.dedup_substring_spans,
-        "agg_domain_stats": TS.agg_domain_stats,
-        "quality_filter_gopher_rep": TS.quality_filter_gopher_rep,
-        "decontam_ngram_overlap": CU.decontam_ngram_overlap,
-        # the fuzzy decontamination leg: near-dup matching against the
-        # benchmark slice through the shared MinHash/LSH band index —
-        # catches paraphrased eval leakage exact windows miss
-        # (new in r5)
-        "decontam_minhash": CU.decontam_minhash,
-        # the composed 3-leg contamination verdict (new in r5)
-        "decontam_report": CU.decontam_report,
-        # the EMBEDDING decontamination leg: cosine against the
-        # broadcast benchmark slice — catches rewritten eval items that
-        # share no surface n-grams (new in r5)
-        "decontam_embedding": CU.decontam_embedding,
-        # SemDeDup: semantic dedup scoped to the memoized IVF clusters —
-        # within-cluster pairs only, min-id keep-first verdict per
-        # vector (new in r5)
-        "dedup_semdedup": SIM.dedup_semdedup,
-        "sample_domain_cap": CU.sample_domain_cap,
-        "dedup_lines_global": CU.dedup_lines_global,
-        "sample_token_budget": CU.sample_token_budget,
-        "curation_funnel": CU.curation_funnel,
-        "filter_bloom_blocklist": CU.filter_bloom_blocklist,
-        "agg_length_percentiles": SK.agg_length_percentiles,
-        "sample_stratified_split": SK.sample_stratified_split,
-        "sketch_distinct_hll": SK.sketch_distinct_hll,
-        "sample_temperature_mix": CU.sample_temperature_mix,
-        "dedup_incremental_lsh": D.dedup_incremental_lsh,
-        "sketch_heavy_hitters_cms": SK.sketch_heavy_hitters_cms,
-        "pipeline_domain_report": RT.pipeline_domain_report,
-        "sample_pack_sequences": CU.sample_pack_sequences,
-        "embedding_label_outliers": SIM.embedding_label_outliers,
-        "text_chunk_windows": TS.text_chunk_windows,
-        "agg_cube_status_priority": R.agg_cube_status_priority,
-        "join_asof_orders": TP.join_asof_orders,
-        "range_join_event_pairs": TP.range_join_event_pairs,
-        "sketch_distinct_kmv": SK.sketch_distinct_kmv,
-        "sample_hash_stable": SK.sample_hash_stable,
-    }
-    prefix = _R5_WINDOW + _R5_NEXT
-    missing = [n for n in prefix if n not in q]
-    assert not missing, f"rotation names absent from queries(): {missing}"
-    assert len(_R5_WINDOW) == len(set(prefix)) - len(_R5_NEXT) == 50
-    ordered = {n: q[n] for n in prefix}
-    ordered.update((n, f) for n, f in q.items() if n not in ordered)
-    return ordered
-
-
-# The first 50 entries the driver checks this round — see the queries()
-# docstring for the tier derivation. Order within a tier: highest-risk
-# first (new ops, then changed plans, then value-neutral code changes,
-# then never-checked, displaced, overflow, and stalest greens).
-_R5_WINDOW = [
-    # -- tier 1: new in r5, final batch (k-core peel, theta-sketch
-    # intersection, MAD anomaly rule) — new code leads the window;
-    # each displaced one TWIN whose changed path an in-window sibling
-    # still exercises (see the _R5_NEXT head notes) --
-    "graph_kcore",
-    "sketch_kmv_intersect",
-    "events_anomaly_mad",
-    "rfm_customer_segments",
-    # -- tier 1: new in r5 --
-    "search_phrase_topk",
-    "collocations_pmi",
-    "dedup_bloom_probe",
-    "search_query_expansion",
-    "search_spell_suggest",
-    "graph_triangle_count",
-    "sketch_hll_merge_shards",
-    "text_zipf_fit",
-    "text_keyphrases",
-    "langid_eval_confusion",
-    "search_autocomplete",
-    "text_winnow_fingerprints",
-    "dedup_winnow_pairs",
-    "graph_degree_powerlaw",
-    "mm_video_scene_cut",
-    "mm_audio_vad",
-    "events_funnel",
-    "events_retention",
-    "events_markov_transitions",
-    "ann_hamming_topk",
-    "stream_join_attribution",
-    "quality_filter_fineweb",
-    "dedup_semdedup",
-    "decontam_embedding",
-    "mm_ocr_text",
-    "ann_rrf_hybrid",
-    "ann_ivf_pq_topk",
-    "ann_ivf_pq_recall",
-    "decontam_minhash",
-    "mm_image_ahash",
-    "text_readability",
-    "graph_salsa",
-    # -- tier 1: changed in r5 --
-    "text_pii_scrub",
-    "embedding_kmeans",
-    "pagerank_link_graph",
-    "dedup_incremental_lsh",
-    "dedup_minhash_lsh",
-    "tokenizer_bpe_encode",
-    "search_rrf_fusion",
-    # -- tier 1: never driver-checked (born past the r4 window) --
-    "stream_quantiles_logbin",
-    "dedup_lsh_exact_reps",
-    "url_domain_etld1_dim",
-    # -- tier 1: displaced r2 rows + r4 overflows --
-    "pipeline_pdf_roundtrip",
-    "pipeline_warc_roundtrip",
-    "dedup_embedding_keep_canonical",
-    "pipeline_invoice_roundtrip",
-    # -- tier 2: stalest r1/r2 greens (33 of 36) --
-]
-
-# positions 51-59: the r1/r2-green scalar slices the 50-slot window
-# could not hold once the six new r5 tier-1 entries (IVFADC pair,
-# decontam_minhash, mm_image_ahash, text_readability, graph_salsa)
-# joined (all unchanged since r1/r2, local-sweep green) — first in
-# line should the window ever widen
-_R5_NEXT = [
-    # position 51 — new r5 code shipping one slot past the window, the
-    # strongest possible out-of-window case: its oracle IS the
-    # in-window events_anomaly_mad SQL verbatim (batch==stream is the
-    # checked contract), pytest pins stream==batch row equality, and
-    # the local driver-strength gate passes. Leads the next fill.
-    "stream_anomaly_mad",
-    # positions 52-53 — the last two r5 additions, past a window
-    # already full of promised new-code slots; shipping on the local
-    # driver-strength gate (same canonicalization as the driver) +
-    # full-semantics Python replay pins, documented rather than
-    # silently displacing promised entries. Both ride the in-window-
-    # exercised _graph_pins machinery; graph_assortativity shares the
-    # und/degree construction driver-checked via graph_kcore.
-    "graph_assortativity",
-    "graph_host_edges",
-    # position 54 — personalized PageRank: the ITERATION is the
-    # in-window-exercised pagerank_link_graph plan verbatim (same
-    # pins, same integer update, same lazy-lineage carry); the delta
-    # is the seed-gated teleport term, replay-pinned in pytest
-    "graph_ppr_seeds",
-    # position 55 — theta-algebra completion: shares the literal
-    # _kmv_sketch_parts code (memoized set, thetas, retained samples)
-    # with in-window sketch_kmv_intersect; the new set operations are
-    # replay-pinned and carry the exact sample-count identity bit
-    "sketch_kmv_setops",
-    # displaced by rfm_customer_segments: search_snippet_topk's new
-    # machinery is the shared phrase ranking, in-window via
-    # search_phrase_topk; the snippet-specific tail (first-occurrence
-    # window + broadcast doc-store lookup) is pytest-pinned and
-    # local-sweep green
-    "search_snippet_topk",
-    # displaced by the final-batch trio (graph_kcore,
-    # sketch_kmv_intersect, events_anomaly_mad) under the
-    # new-code-first policy — each a TWIN whose code path stays
-    # driver-exercised by an in-window sibling:
-    #   search_proximity_topk — probes the SAME memoized positional
-    #     postings index as in-window search_phrase_topk (the r5 delta
-    #     is the shared index build);
-    #   ann_hamming_recall — the recall harness over in-window
-    #     ann_hamming_topk's code table, same shape as in-window
-    #     ann_ivf_pq_recall;
-    #   decontam_report — a bounded rollup COMPOSED of in-window
-    #     decontam_minhash + decontam_embedding legs.
-    # All three pass the local driver-strength sweep this round.
-    "search_proximity_topk",
-    "ann_hamming_recall",
-    "decontam_report",
-    # displaced last by events_markov_transitions: its r5 change is the
-    # value-neutral encode-cache tuple, and tokenizer_bpe_encode (still
-    # in-window) exercises the same changed path — lowest-risk eviction
-    # under the new-ops-first policy
-    "tokenizer_vocab_coverage",
-    # displaced from tier 2 by the positional-retrieval pair, the
-    # PMI collocation miner and the Bloom dedup probe (newest r5
-    # entries): r1-green slices, local-sweep green, first in line
-    # for the next fill
-    "pipeline_gzip_roundtrip",
-    "pipeline_sections",
-    "pipeline_table_roundtrip",
-    "stream_events_daily",
-    "dedup_exact",
-    "dedup_simhash",
-    "text_dup_fraction",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "dedup_embedding_lsh",
-    "ann_cosine_topk",
-    "ann_ivf_topk",
-    "q1_pricing_summary",
-    "agg_keyword_score_argmax",
-    "window_sessionize",
-    "join_nation_region_rollup",
-    "join_customer_orders",
-    "agg_order_totals",
-    "events_daily_metrics",
-    "agg_bool_checks",
-    # displaced from tier 2 by the five late-r5 ops (dedup_semdedup,
-    # decontam_embedding, ann_hamming_topk, ann_hamming_recall,
-    # stream_join_attribution, quality_filter_fineweb,
-    # decontam_report):
-    # r1/r2-green scalar projections and window slices, local-sweep
-    # green, queued first for r6's fill
-    "window_running_spend",
-    "join_semi_orders_with_items",
-    "topk_parts_by_price",
-    "window_top3_events_per_user",
-    "join_anti_customers_without_orders",
-    "filter_events_window",
-    "filter_keyword_headers",
-    "f_date_normalize",
-    "f_amount_normalize",
-    "f_lang_detect",
-    "f_json_parse_fallback",
-    "agg_first3_events_per_user",
-    "f_doc_type_case",
-    "f_clamp_score",
-    "union_head_tail",
-    "orders_page2",
-]
+    """Operator name -> (spark, sf_dir) -> DataFrame, in ``_OPS`` order."""
+    q = {name: builder for name, builder, _ in _OPS}
+    if len(q) != len(_OPS):
+        dups = [n for n, k in Counter(n for n, _, _ in _OPS).items() if k > 1]
+        raise ValueError(f"operator names repeat in _OPS: {dups}")
+    return q
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "q1_pricing_summary": """
-            SELECT l_returnflag, l_linestatus,
-                   CAST(round(sum(CAST(l_quantity AS DECIMAL(28,8))), 2) AS DOUBLE) AS sum_qty,
-                   CAST(round(sum(CAST(l_extendedprice AS DECIMAL(28,8))), 2) AS DOUBLE) AS sum_base_price,
-                   CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,8))), 2) AS DOUBLE) AS sum_disc_price,
-                   round(CAST(sum(CAST(l_quantity AS DECIMAL(28,8))) AS DOUBLE) / count(l_quantity), 4) AS avg_qty,
-                   round(CAST(sum(CAST(l_discount AS DECIMAL(28,8))) AS DOUBLE) / count(l_discount), 4) AS avg_disc,
-                   count(*) AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-            GROUP BY l_returnflag, l_linestatus
-        """,
-        "agg_column_profile": """
-            SELECT lang,
-                   count(*) AS n_docs,
-                   count(DISTINCT source) AS n_sources,
-                   CAST(sum(CASE WHEN text IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_text,
-                   round(CAST(sum(CAST(n_chars AS DECIMAL(28,8))) AS DOUBLE) / count(n_chars), 4) AS avg_chars,
-                   min(n_chars) AS min_chars,
-                   max(n_chars) AS max_chars
-            FROM documents GROUP BY lang
-        """,
-        "sniff_roundtrip": """
-            WITH base AS (
-                SELECT doc_id,
-                       CAST(floor(doc_id / 4) AS BIGINT) % 4 AS bm,
-                       doc_id % 53 = 0 AS is_empty,
-                       CASE doc_id % 4 WHEN 0 THEN ',' WHEN 1 THEN ';'
-                            WHEN 2 THEN chr(9) ELSE '|' END AS d,
-                       source, coalesce(lang, '') AS lang0,
-                       substr(coalesce(text, ''), 1, 120) AS sample
-                FROM documents
-            ),
-            built AS (
-                SELECT doc_id, bm, is_empty,
-                       CASE WHEN is_empty THEN '' ELSE
-                           'id' || d || 'status' || d || 'label' || chr(10) ||
-                           CAST(doc_id AS VARCHAR) || d || source || d || lang0 || chr(10) ||
-                           sample || chr(10) ||
-                           repeat(',', CAST(doc_id % 5 AS INT)) ||
-                           repeat(';', CAST(doc_id % 7 AS INT)) ||
-                           repeat('|', CAST(doc_id % 3 AS INT))
-                       END AS body
-                FROM base
-            ),
-            counted AS (
-                SELECT doc_id, bm, is_empty,
-                       length(body) - length(replace(body, ',', '')) AS cc,
-                       length(body) - length(replace(body, ';', '')) AS cs,
-                       length(body) - length(replace(body, chr(9), '')) AS ct,
-                       length(body) - length(replace(body, '|', '')) AS cp
-                FROM built
-            )
-            SELECT doc_id,
-                   CASE WHEN is_empty THEN 'utf-8'
-                        WHEN bm = 0 THEN 'utf-8-sig'
-                        WHEN bm = 1 THEN 'utf-16-le'
-                        WHEN bm = 2 THEN 'utf-16-be'
-                        ELSE 'utf-8' END AS encoding,
-                   CASE WHEN cc = greatest(cc, cs, ct, cp) THEN ','
-                        WHEN cs = greatest(cc, cs, ct, cp) THEN ';'
-                        WHEN ct = greatest(cc, cs, ct, cp) THEN chr(9)
-                        ELSE '|' END AS delimiter,
-                   NOT is_empty AS accepted,
-                   CASE WHEN is_empty THEN 'empty payload' END AS skip_reason
-            FROM counted
-        """,
-        "agg_bool_checks": """
-            SELECT l_returnflag,
-                   bool_and(l_quantity >= 0) AS all_qty_nonneg,
-                   bool_and(l_discount >= 0 AND l_discount <= 1) AS all_disc_in_range,
-                   bool_and(l_shipdate IS NOT NULL) AS all_dates_present,
-                   count(*) AS n_rows
-            FROM lineitem GROUP BY l_returnflag
-        """,
-        "agg_rollup_category": """
-            SELECT p_brand,
-                   count(*) AS n_parts,
-                   round(CAST(sum(CAST(p_retailprice AS DECIMAL(28,8))) AS DOUBLE) / count(p_retailprice), 4) AS avg_price,
-                   CAST(sum(p_size) AS BIGINT) AS sum_size
-            FROM part GROUP BY ROLLUP(p_brand)
-        """,
-        "agg_order_totals": """
-            SELECT l_orderkey,
-                   CAST(round(sum(CAST(l_quantity AS DECIMAL(28,8))), 2) AS DOUBLE) AS total_qty,
-                   CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,8))), 2) AS DOUBLE) AS revenue,
-                   count(*) AS n_items
-            FROM lineitem GROUP BY l_orderkey
-        """,
-        "events_daily_metrics": """
-            SELECT event_type, date_trunc('day', ts) AS day,
-                   count(*) AS n_events,
-                   count(DISTINCT user_id) AS n_users,
-                   CAST(round(sum(CAST(value AS DECIMAL(28,8))), 4) AS DOUBLE) AS sum_value
-            FROM events GROUP BY event_type, date_trunc('day', ts)
-        """,
-        "join_customer_orders": """
-            SELECT c_custkey, c_mktsegment,
-                   count(*) AS n_orders,
-                   CAST(round(sum(CAST(o_totalprice AS DECIMAL(28,8))), 2) AS DOUBLE) AS total_spend
-            FROM orders JOIN customer ON o_custkey = c_custkey
-            GROUP BY c_custkey, c_mktsegment
-        """,
-        "join_nation_region_rollup": """
-            SELECT r_name,
-                   count(*) AS n_customers,
-                   CAST(round(sum(CAST(c_acctbal AS DECIMAL(28,8))), 2) AS DOUBLE) AS sum_acctbal
-            FROM customer
-            JOIN nation ON c_nationkey = n_nationkey
-            JOIN region ON n_regionkey = r_regionkey
-            GROUP BY r_name
-        """,
-        "join_semi_orders_with_items": """
-            SELECT o_orderstatus, count(*) AS n_orders
-            FROM orders
-            WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)
-            GROUP BY o_orderstatus
-        """,
-        "join_anti_customers_without_orders": """
-            SELECT c_custkey, c_name, c_mktsegment
-            FROM customer
-            WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        """,
-        "topk_parts_by_price": """
-            SELECT p_partkey, p_name, p_brand, p_retailprice
-            FROM part ORDER BY p_retailprice DESC, p_partkey ASC LIMIT 10
-        """,
-        "orders_page2": """
-            SELECT o_orderkey, o_custkey, o_orderdate, o_totalprice
-            FROM orders ORDER BY o_orderdate DESC, o_orderkey ASC
-            LIMIT 20 OFFSET 10
-        """,
-        "window_running_spend": """
-            SELECT user_id, event_id,
-                   row_number() OVER w AS rn,
-                   round(sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4)
-                       AS running_value
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        """,
-        "window_top3_events_per_user": """
-            SELECT user_id, event_id, event_type, value, rk FROM (
-                SELECT *, row_number() OVER (PARTITION BY user_id
-                       ORDER BY value DESC, event_id ASC) AS rk
-                FROM events
-            ) WHERE rk <= 3
-        """,
-        "union_head_tail": """
-            (SELECT l_orderkey, l_linenumber, l_quantity
-             FROM lineitem ORDER BY l_orderkey ASC, l_linenumber ASC LIMIT 500)
-            UNION ALL
-            (SELECT l_orderkey, l_linenumber, l_quantity
-             FROM lineitem ORDER BY l_orderkey DESC, l_linenumber DESC LIMIT 500)
-        """,
-        "filter_events_window": """
-            SELECT event_id, ts, user_id, event_type, value
-            FROM events
-            WHERE ts >= TIMESTAMP '2024-01-08 00:00:00'
-              AND ts < TIMESTAMP '2024-01-15 00:00:00'
-              AND value > 50.0
-        """,
-        "filter_keyword_headers": """
-            SELECT p_brand, count(*) AS n_colored
-            FROM part
-            WHERE regexp_matches(p_name, '(green|blue|red)')
-            GROUP BY p_brand
-        """,
-        "f_date_normalize": """
-            WITH raw AS (
-                SELECT o_orderkey,
-                       CASE o_orderkey % 3
-                         WHEN 0 THEN strftime(o_orderdate, '%Y-%m-%d')
-                         WHEN 1 THEN strftime(o_orderdate, '%m/%d/%Y')
-                         ELSE strftime(o_orderdate, '%d.%m.%Y')
-                       END AS raw_date
-                FROM orders
-            )
-            SELECT o_orderkey, raw_date,
-                   strftime(coalesce(
-                       try_strptime(raw_date, '%Y-%m-%d'),
-                       try_strptime(raw_date, '%m/%d/%Y'),
-                       try_strptime(raw_date, '%d.%m.%Y')), '%Y-%m-%d') AS norm_date
-            FROM raw
-        """,
-        "f_amount_normalize": """
-            WITH raw AS (
-                SELECT o_orderkey,
-                       '$' || CASE WHEN o_orderkey % 2 = 0
-                         THEN format('{:,}', CAST(floor(o_totalprice) AS BIGINT))
-                              || '.' ||
-                              lpad(CAST(CAST(round(o_totalprice * 100) AS BIGINT) % 100
-                                   AS VARCHAR), 2, '0')
-                         ELSE printf('%.2f', o_totalprice)
-                       END AS raw_amount
-                FROM orders
-            )
-            SELECT o_orderkey, raw_amount,
-                   CAST(regexp_replace(raw_amount, '[^0-9.\\-]', '', 'g') AS DOUBLE)
-                       AS amount
-            FROM raw
-        """,
-        "f_clamp_score": """
-            SELECT c_custkey,
-                   round(least(1.0, greatest(0.0, c_acctbal / 5000.0)), 6) AS clamped
-            FROM customer
-        """,
-        "f_doc_type_case": """
-            SELECT doc_id,
-                   CASE
-                     WHEN contains(lower(coalesce(text, '')), 'table') THEN 'tabular'
-                     WHEN contains(lower(coalesce(text, '')), 'stream') THEN 'streaming'
-                     WHEN contains(lower(coalesce(text, '')), 'vector') THEN 'vector'
-                     ELSE 'other'
-                   END AS doc_type
-            FROM documents
-        """,
-        "f_lang_detect": """
-            SELECT doc_id,
-                   CASE WHEN regexp_matches(text, '[぀-ヿ一-鿿]')
-                        THEN 'ja' ELSE 'en' END AS detected_lang
-            FROM documents
-        """,
-        "pipeline_table_roundtrip": RT.ORACLE_SQL,
-        "pipeline_invoice_roundtrip": RF.ORACLE_SQL,
-        "pipeline_pdf_roundtrip": RP.ORACLE_SQL,
-        "pipeline_xlsx_roundtrip": RX.ORACLE_SQL,
-        "pipeline_xls_roundtrip": RXL.ORACLE_SQL,
-        "pipeline_docx_roundtrip": RDX.ORACLE_SQL,
-        "pipeline_sections": RT.SECTIONS_ORACLE_SQL,
-        "pipeline_gzip_roundtrip": RT.GZIP_ORACLE_SQL,
-        "pipeline_warc_roundtrip": RT.WARC_ORACLE_SQL,
-        "stream_events_daily": SW.STREAM_EVENTS_DAILY_ORACLE,
-        "stream_events_daily_append": SW.STREAM_EVENTS_DAILY_APPEND_ORACLE,
-        "stream_stateful_domain_counts": SS.stateful_oracle_sql(),
-        "join_asof_orders": TP.ASOF_ORACLE_SQL,
-        "range_join_event_pairs": TP.RANGE_ORACLE_SQL,
-        "sketch_distinct_kmv": SK.KMV_ORACLE_SQL,
-        "sample_hash_stable": SK.SAMPLE_ORACLE_SQL,
-        "agg_length_percentiles": SK.PERCENTILE_ORACLE_SQL,
-        "sketch_quantiles_logbin": SK.QSKETCH_ORACLE_SQL,
-        "dedup_bloom_probe": SK.BLOOM_ORACLE_SQL,
-        "sketch_hll_merge_shards": SK.HLL_MERGE_ORACLE_SQL,
-        "sketch_kmv_intersect": SK.KMV_INTERSECT_ORACLE_SQL,
-        "graph_kcore": G.KCORE_ORACLE_SQL,
-        "events_anomaly_mad": TP.ANOMALY_MAD_ORACLE_SQL,
-        # the streaming twin is checked against the IDENTICAL batch
-        # SQL — batch==stream is the contract (stream_quantiles_logbin
-        # pattern)
-        "stream_anomaly_mad": TP.ANOMALY_MAD_ORACLE_SQL,
-        "rfm_customer_segments": R.RFM_ORACLE_SQL,
-        "graph_assortativity": G.ASSORTATIVITY_ORACLE_SQL,
-        "graph_host_edges": G.HOST_EDGES_ORACLE_SQL,
-        "graph_ppr_seeds": G.PPR_ORACLE_SQL,
-        "sketch_kmv_setops": SK.KMV_SETOPS_ORACLE_SQL,
-        # the streaming drain of the same sketch must equal the same
-        # batch recompute — one oracle text, two execution paths
-        "stream_quantiles_logbin": SK.QSKETCH_ORACLE_SQL,
-        # equivalence ops share their target's twin: exact-reps LSH must
-        # reproduce the components labeling; the dimension-join eTLD+1
-        # must reproduce the literal projection
-        "dedup_lsh_exact_reps": ORC.dedup_connected_components(),
-        "url_domain_etld1_dim": TS.URL_ETLD1_ORACLE_SQL,
-        "sketch_distinct_hll": SK.HLL_ORACLE_SQL,
-        "sample_temperature_mix": CU.TEMPERATURE_MIX_ORACLE_SQL,
-        "sketch_heavy_hitters_cms": SK.CMS_ORACLE_SQL,
-        "pipeline_domain_report": RT.DOMAIN_REPORT_ORACLE_SQL,
-        "sample_pack_sequences": ORC.sample_pack_sequences(),
-        "embedding_label_outliers": ORC.embedding_label_outliers(),
-        "text_chunk_windows": ORC.text_chunk_windows(),
-        "search_keyword_topk": SRCH.SEARCH_ORACLE_SQL,
-        "search_bm25_topk": SRCH.BM25_ORACLE_SQL,
-        "search_rrf_fusion": SRCH.RRF_ORACLE_SQL,
-        "ann_rrf_hybrid": SRCH.HYBRID_ORACLE_SQL,
-        "search_index_refresh": SRCH.IDX_REFRESH_ORACLE_SQL,
-        "search_phrase_topk": SRCH.PHRASE_ORACLE_SQL,
-        "search_query_expansion": SRCH.EXPANSION_ORACLE_SQL,
-        "search_spell_suggest": SRCH.SPELL_ORACLE_SQL,
-        "search_snippet_topk": SRCH.SNIPPET_ORACLE_SQL,
-        "search_proximity_topk": SRCH.PROX_ORACLE_SQL,
-        "tokenizer_bpe_pairs": TOK.BPE_ORACLE_SQL,
-        "tokenizer_bpe_train": TOK.BPE_TRAIN_ORACLE_SQL,
-        "tokenizer_bpe_encode": TOK.BPE_ENCODE_ORACLE_SQL,
-        "tokenizer_vocab_coverage": TOK.BPE_COVERAGE_ORACLE_SQL,
-        "ann_ivf_recall": ORC.ann_ivf_recall(),
-        "ann_hamming_topk": ORC.ann_hamming_topk(),
-        "ann_hamming_recall": ORC.ann_hamming_recall(),
-        "embedding_kmeans": SIM.KMEANS_ORACLE_SQL,
-        "ann_pq_topk": SIM.PQ_ORACLE_SQL,
-        "ann_pq_recall": ORC.ann_pq_recall(),
-        "ann_ivf_pq_topk": SIM.IVFPQ_ORACLE_SQL,
-        "ann_ivf_pq_recall": ORC.ann_ivf_pq_recall(),
-        "quality_perplexity_unigram": QL.PERPLEXITY_ORACLE_SQL,
-        "text_token_entropy": QL.ENTROPY_ORACLE_SQL,
-        "quality_perplexity_bigram": QL.BIGRAM_ORACLE_SQL,
-        "quality_perplexity_kn": QL.KN_ORACLE_SQL,
-        "quality_classifier_nb": QL.NB_ORACLE_SQL,
-        "collocations_pmi": QL.PMI_ORACLE_SQL,
-        "text_zipf_fit": QL.ZIPF_ORACLE_SQL,
-        "text_keyphrases": QL.KEYPHRASE_ORACLE_SQL,
-        "langid_eval_confusion": TS.LANGID_CONFUSION_ORACLE_SQL,
-        "search_autocomplete": SRCH.AUTOCOMPLETE_ORACLE_SQL,
-        "text_winnow_fingerprints": TS.WINNOW_ORACLE_SQL,
-        "dedup_winnow_pairs": D.WINNOW_PAIRS_ORACLE_SQL,
-        "graph_degree_powerlaw": G.DEGREE_POWERLAW_ORACLE_SQL,
-        "mm_video_scene_cut": ORC.mm_video_scene_cut(),
-        "mm_audio_vad": ORC.mm_audio_vad(),
-        "events_funnel": R.FUNNEL_ORACLE_SQL,
-        "events_retention": R.RETENTION_ORACLE_SQL,
-        "events_markov_transitions": R.MARKOV_ORACLE_SQL,
-        "classifier_eval_pr": QL.EVAL_PR_ORACLE_SQL,
-        "sample_dsir_select": QL.DSIR_ORACLE_SQL,
-        "dsir_eval_report": QL.DSIR_EVAL_ORACLE_SQL,
-        "text_langid_ngram": TS.LANGID_NGRAM_ORACLE_SQL,
-        "text_fix_mojibake": TS.MOJIBAKE_ORACLE_SQL,
-        "url_domain_etld1": TS.URL_ETLD1_ORACLE_SQL,
-        "text_nfc_normalize": TS.NFC_ORACLE_SQL,
-        "sample_mix_epochs": CU.MIX_EPOCHS_ORACLE_SQL,
-        "stream_session_windows": SW.SESSION_WINDOWS_ORACLE_SQL,
-        "stream_join_attribution": SW.ATTRIBUTION_ORACLE_SQL,
-        "pipeline_resume_snapshot": RT.RESUME_SNAPSHOT_ORACLE_SQL,
-        "pipeline_wet_roundtrip": RT.WET_ORACLE_SQL,
-        "extract_outlinks": LNK.OUTLINKS_ORACLE_SQL,
-        "anchor_text_index": LNK.ANCHOR_INDEX_ORACLE_SQL,
-        "filter_robots_gate": LNK.ROBOTS_ORACLE_SQL,
-        "catalog_compact_roundtrip": RT.COMPACT_ORACLE_SQL,
-        "crawl_delta_report": ORC.crawl_delta_report(),
-        "warc_cdx_index": RT.CDX_ORACLE_SQL,
-        "crawl_frontier_topk": LNK.FRONTIER_ORACLE_SQL,
-        "crawl_schedule_waves": LNK.SCHEDULE_ORACLE_SQL,
-        "sitemap_discover": LNK.SITEMAP_ORACLE_SQL,
-        "pipeline_metrics_report": RT.METRICS_REPORT_ORACLE_SQL,
-        "pagerank_link_graph": G.PAGERANK_ORACLE_SQL,
-        "graph_salsa": G.SALSA_ORACLE_SQL,
-        "graph_triangle_count": G.TRIANGLE_ORACLE_SQL,
-        "sample_stratified_split": SK.SPLIT_ORACLE_SQL,
-        # nbsp (chr(160)) replaced before the \\s collapse to mirror the
-        # kernel's collapse_ws exactly (RE2's \\s is ASCII-only)
-        "pipeline_main_text": """
-            SELECT 'https://' || source || '.example.com/doc/' || doc_id AS url,
-                   trim(regexp_replace(replace(coalesce(text, ''), chr(160), ' '),
-                        '\\s+', ' ', 'g')) AS main_text,
-                   trim(regexp_replace(replace(coalesce(text, ''), chr(160), ' '),
-                        '\\s+', ' ', 'g')) <> '' AS nonempty
-            FROM documents
-        """,
-        "agg_keyword_score_argmax": """
-            WITH s AS (
-                SELECT doc_id,
-                       CASE WHEN regexp_matches(lower(coalesce(text,'')), 'invoice') THEN 2 ELSE 0 END
-                     + CASE WHEN regexp_matches(lower(coalesce(text,'')), 'total|vendor|due') THEN 1 ELSE 0 END AS s_invoice,
-                       CASE WHEN regexp_matches(lower(coalesce(text,'')), 'report|sales') THEN 2 ELSE 0 END
-                     + CASE WHEN regexp_matches(lower(coalesce(text,'')), 'summary|quarter') THEN 1 ELSE 0 END AS s_report,
-                       CASE WHEN regexp_matches(lower(coalesce(text,'')), 'inventory|catalog') THEN 2 ELSE 0 END
-                     + CASE WHEN regexp_matches(lower(coalesce(text,'')), 'stock|sku') THEN 1 ELSE 0 END AS s_inventory,
-                       CASE WHEN regexp_matches(lower(coalesce(text,'')), 'form|application') THEN 2 ELSE 0 END
-                     + CASE WHEN regexp_matches(lower(coalesce(text,'')), 'field|signature') THEN 1 ELSE 0 END AS s_form
-                FROM documents
-            )
-            SELECT doc_id,
-                   CAST(s_invoice AS BIGINT) AS s_invoice,
-                   CAST(s_report AS BIGINT) AS s_report,
-                   CAST(s_inventory AS BIGINT) AS s_inventory,
-                   CAST(s_form AS BIGINT) AS s_form,
-                   CASE
-                     WHEN greatest(s_invoice, s_report, s_inventory, s_form) = 0 THEN 'generic'
-                     WHEN s_invoice = greatest(s_invoice, s_report, s_inventory, s_form) THEN 'invoice'
-                     WHEN s_report = greatest(s_invoice, s_report, s_inventory, s_form) THEN 'report'
-                     WHEN s_inventory = greatest(s_invoice, s_report, s_inventory, s_form) THEN 'inventory'
-                     ELSE 'form'
-                   END AS detected_type
-            FROM s
-        """,
-        "f_json_parse_fallback": """
-            WITH raw AS (
-                SELECT o_orderkey,
-                       CASE WHEN o_orderkey % 3 < 2
-                         THEN '{"key": ' || o_orderkey || ', "status": "' || o_orderstatus || '"}'
-                         ELSE '{"key": broken'
-                       END AS payload
-                FROM orders
-            )
-            SELECT o_orderkey,
-                   CASE WHEN json_valid(payload)
-                        THEN CAST(json_extract(payload, '$.key') AS BIGINT) END AS parsed_key,
-                   coalesce(
-                       CASE WHEN json_valid(payload)
-                            THEN json_extract_string(payload, '$.status') END,
-                       'raw_extraction') AS parsed_status,
-                   NOT json_valid(payload) AS parse_failed
-            FROM raw
-        """,
-        "agg_first3_events_per_user": """
-            SELECT user_id,
-                   array_to_string(
-                       list_transform(
-                           (list(event_id ORDER BY ts, event_id))[1:3],
-                           e -> CAST(e AS VARCHAR)),
-                       ',') AS first3_event_ids,
-                   count(*) AS n_events
-            FROM events GROUP BY user_id
-        """,
-        "agg_cube_status_priority": """
-            SELECT o_orderstatus, o_orderpriority,
-                   count(*) AS n_orders,
-                   CAST(round(sum(CAST(o_totalprice AS DECIMAL(28,8))), 2) AS DOUBLE) AS total_price
-            FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-        """,
-        "window_sessionize": """
-            WITH s AS (
-                -- floor(epoch) truncates sub-second fractions, matching
-                -- Spark's unix_timestamp; a bare CAST rounds to nearest
-                -- and shifts ~half the epochs by 1s (spurious boundary
-                -- flips for gaps straddling 1800s)
-                SELECT user_id, event_id, ts, value,
-                       CASE WHEN lag(CAST(floor(epoch(ts)) AS BIGINT)) OVER w IS NULL
-                              OR CAST(floor(epoch(ts)) AS BIGINT)
-                                 - lag(CAST(floor(epoch(ts)) AS BIGINT)) OVER w > 1800
-                            THEN 1 ELSE 0 END AS new_session
-                FROM events
-                WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-            ),
-            t AS (
-                SELECT *, CAST(sum(new_session) OVER (
-                         PARTITION BY user_id ORDER BY ts, event_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                     AS BIGINT) AS session_seq
-                FROM s
-            )
-            SELECT user_id, session_seq,
-                   min(ts) AS session_start,
-                   max(ts) AS session_end,
-                   count(*) AS n_events,
-                   CAST(round(sum(CAST(value AS DECIMAL(28,8))), 4) AS DOUBLE)
-                       AS session_value
-            FROM t GROUP BY user_id, session_seq
-        """,
-        # training-data ops — DuckDB twins generated from shared constants
-        "dedup_exact": ORC.dedup_exact(),
-        "dedup_minhash_lsh": ORC.dedup_minhash_lsh(),
-        "dedup_lsh_recall": ORC.dedup_lsh_recall(),
-        "dedup_incremental_lsh": ORC.dedup_incremental_lsh(),
-        "dedup_simhash": ORC.dedup_simhash(),
-        "dedup_connected_components": ORC.dedup_connected_components(),
-        "text_dup_fraction": ORC.text_dup_fraction(),
-        "dedup_ngram_jaccard": ORC.dedup_ngram_jaccard(),
-        "dedup_embedding_cosine": ORC.dedup_embedding_cosine(),
-        "ann_cosine_topk": ORC.ann_cosine_topk(),
-        "ann_ivf_topk": ORC.ann_ivf_topk(),
-        "dedup_semdedup": ORC.dedup_semdedup(),
-        "decontam_embedding": ORC.decontam_embedding(),
-        "decontam_report": ORC.decontam_report(),
-        "dedup_embedding_lsh": ORC.dedup_embedding_lsh(),
-        "text_token_stats": ORC.text_token_stats(),
-        "text_unigram_rarity": ORC.text_unigram_rarity(),
-        "quality_filter_c4": ORC.quality_filter_c4(),
-        "dedup_url_keep_first": ORC.dedup_url_keep_first(),
-        "dedup_substring_spans": ORC.dedup_substring_spans(),
-        "agg_domain_stats": ORC.agg_domain_stats(),
-        "quality_filter_gopher_rep": ORC.quality_filter_gopher_rep(),
-        "decontam_ngram_overlap": ORC.decontam_ngram_overlap(),
-        "decontam_minhash": ORC.decontam_minhash(),
-        "sample_domain_cap": ORC.sample_domain_cap(),
-        "dedup_minhash_keep_canonical": ORC.dedup_minhash_keep_canonical(),
-        "dedup_lines_global": ORC.dedup_lines_global(),
-        "sample_token_budget": ORC.sample_token_budget(),
-        "dedup_embedding_keep_canonical": ORC.dedup_embedding_keep_canonical(),
-        "curation_funnel": ORC.curation_funnel(),
-        "filter_bloom_blocklist": ORC.filter_bloom_blocklist(),
-        "stream_dedup_urls": SI.STREAM_DEDUP_URLS_ORACLE,
-        "text_quality_scores": ORC.text_quality_scores(),
-        "text_readability": ORC.text_readability(),
-        "text_langid": ORC.text_langid(),
-        "text_fingerprint": ORC.text_fingerprint(),
-        "text_pii_scrub": ORC.text_pii_scrub(),
-        "text_line_dedup": ORC.text_line_dedup(),
-        "url_canonicalize": ORC.url_canonicalize(),
-        "quality_filter_gopher": ORC.quality_filter_gopher(),
-        "quality_filter_fineweb": ORC.quality_filter_fineweb(),
-        "mm_image_features": ORC.mm_image_features(),
-        "mm_image_ahash": ORC.mm_image_ahash(),
-        "mm_ocr_text": ORC.mm_ocr_text(),
-        "mm_frame_sample": ORC.mm_frame_sample(),
-        "mm_audio_stats": ORC.mm_audio_stats(),
-    }
+    return {name: sql for name, _, sql in _OPS}

@@ -2,7 +2,7 @@
 
 Every function returns a Column built purely from JVM-side expressions so
 the hot path stays inside WholeStageCodegen. The exact same semantics are
-mirrored in the DuckDB oracle SQL in __spark_entry__ (both engines share
+mirrored in the operators' DuckDB oracle SQL (both engines share
 md5, so every hash here is cross-engine reproducible bit-for-bit).
 
 Reference parity: normalization mirrors the whitespace-collapse canonical

@@ -2,7 +2,7 @@
 callables, plus the training-data operators (dedup, similarity, text
 analysis, multimodal) the engine adds for 100 TB pipelines.
 
-Every callable here is paired with an ANSI-SQL oracle in
-``__spark_entry__.oracle_sql`` unless its semantics are not
-SQL-expressible (noted per function).
+Every callable here has a DuckDB SQL twin, defined beside it as a
+``*_ORACLE_SQL`` constant (or generated in ``oracles.py``) and paired
+with it by one ``__spark_entry__._OPS`` row.
 """

@@ -3,6 +3,7 @@
 Each function: (spark, sf_dir) -> DataFrame over the driver's testdata
 tables. Aggregates are rounded where float summation order could differ
 between engines; every computed column is aliased to match the oracle.
+Each builder's DuckDB twin follows it as a ``*_ORACLE_SQL`` constant.
 """
 
 from __future__ import annotations
@@ -55,6 +56,20 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+Q1_ORACLE_SQL = """
+            SELECT l_returnflag, l_linestatus,
+                   CAST(round(sum(CAST(l_quantity AS DECIMAL(28,8))), 2) AS DOUBLE) AS sum_qty,
+                   CAST(round(sum(CAST(l_extendedprice AS DECIMAL(28,8))), 2) AS DOUBLE) AS sum_base_price,
+                   CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,8))), 2) AS DOUBLE) AS sum_disc_price,
+                   round(CAST(sum(CAST(l_quantity AS DECIMAL(28,8))) AS DOUBLE) / count(l_quantity), 4) AS avg_qty,
+                   round(CAST(sum(CAST(l_discount AS DECIMAL(28,8))) AS DOUBLE) / count(l_discount), 4) AS avg_disc,
+                   count(*) AS count_order
+            FROM lineitem
+            WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+            GROUP BY l_returnflag, l_linestatus
+        """
+
+
 # --- A2: distinct + null counts (column profile) ------------------------------
 
 def agg_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -67,6 +82,18 @@ def agg_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("n_chars").alias("min_chars"),
         F.max("n_chars").alias("max_chars"),
     )
+
+
+COLUMN_PROFILE_ORACLE_SQL = """
+            SELECT lang,
+                   count(*) AS n_docs,
+                   count(DISTINCT source) AS n_sources,
+                   CAST(sum(CASE WHEN text IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_text,
+                   round(CAST(sum(CAST(n_chars AS DECIMAL(28,8))) AS DOUBLE) / count(n_chars), 4) AS avg_chars,
+                   min(n_chars) AS min_chars,
+                   max(n_chars) AS max_chars
+            FROM documents GROUP BY lang
+        """
 
 
 # --- A4: all-rows boolean checks (bool_and) ------------------------------------
@@ -83,6 +110,16 @@ def agg_bool_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+BOOL_CHECKS_ORACLE_SQL = """
+            SELECT l_returnflag,
+                   bool_and(l_quantity >= 0) AS all_qty_nonneg,
+                   bool_and(l_discount >= 0 AND l_discount <= 1) AS all_disc_in_range,
+                   bool_and(l_shipdate IS NOT NULL) AS all_dates_present,
+                   count(*) AS n_rows
+            FROM lineitem GROUP BY l_returnflag
+        """
+
+
 # --- A7: category rollup (grouping sets) ---------------------------------------
 
 def agg_rollup_category(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -97,6 +134,15 @@ def agg_rollup_category(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ROLLUP_CATEGORY_ORACLE_SQL = """
+            SELECT p_brand,
+                   count(*) AS n_parts,
+                   round(CAST(sum(CAST(p_retailprice AS DECIMAL(28,8))) AS DOUBLE) / count(p_retailprice), 4) AS avg_price,
+                   CAST(sum(p_size) AS BIGINT) AS sum_size
+            FROM part GROUP BY ROLLUP(p_brand)
+        """
+
+
 # --- A6: line-item totals per order --------------------------------------------
 
 def agg_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -106,6 +152,15 @@ def agg_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         _dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
         F.count(F.lit(1)).alias("n_items"),
     )
+
+
+ORDER_TOTALS_ORACLE_SQL = """
+            SELECT l_orderkey,
+                   CAST(round(sum(CAST(l_quantity AS DECIMAL(28,8))), 2) AS DOUBLE) AS total_qty,
+                   CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,8))), 2) AS DOUBLE) AS revenue,
+                   count(*) AS n_items
+            FROM lineitem GROUP BY l_orderkey
+        """
 
 
 # --- J1: FK join, dimension broadcast -------------------------------------------
@@ -128,6 +183,15 @@ def join_customer_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+CUSTOMER_ORDERS_ORACLE_SQL = """
+            SELECT c_custkey, c_mktsegment,
+                   count(*) AS n_orders,
+                   CAST(round(sum(CAST(o_totalprice AS DECIMAL(28,8))), 2) AS DOUBLE) AS total_spend
+            FROM orders JOIN customer ON o_custkey = c_custkey
+            GROUP BY c_custkey, c_mktsegment
+        """
+
+
 # --- J2/J3: multiway dim joins ----------------------------------------------------
 
 def join_nation_region_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -145,6 +209,17 @@ def join_nation_region_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+NATION_REGION_ORACLE_SQL = """
+            SELECT r_name,
+                   count(*) AS n_customers,
+                   CAST(round(sum(CAST(c_acctbal AS DECIMAL(28,8))), 2) AS DOUBLE) AS sum_acctbal
+            FROM customer
+            JOIN nation ON c_nationkey = n_nationkey
+            JOIN region ON n_regionkey = r_regionkey
+            GROUP BY r_name
+        """
+
+
 # --- J4: existence (left_semi) -----------------------------------------------------
 
 def join_semi_orders_with_items(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -157,6 +232,14 @@ def join_semi_orders_with_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+SEMI_ORDERS_ORACLE_SQL = """
+            SELECT o_orderstatus, count(*) AS n_orders
+            FROM orders
+            WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)
+            GROUP BY o_orderstatus
+        """
+
+
 # --- J5: resume anti-join (the engine's load-bearing join) ---------------------------
 
 def join_anti_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -165,6 +248,13 @@ def join_anti_customers_without_orders(spark: SparkSession, sf_dir: str) -> Data
     return cust.join(
         orders, cust.c_custkey == orders.o_custkey, "left_anti"
     ).select("c_custkey", "c_name", "c_mktsegment")
+
+
+ANTI_CUSTOMERS_ORACLE_SQL = """
+            SELECT c_custkey, c_name, c_mktsegment
+            FROM customer
+            WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+        """
 
 
 # --- W1: top-k ------------------------------------------------------------------------
@@ -180,6 +270,12 @@ def topk_parts_by_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+TOPK_PARTS_ORACLE_SQL = """
+            SELECT p_partkey, p_name, p_brand, p_retailprice
+            FROM part ORDER BY p_retailprice DESC, p_partkey ASC LIMIT 10
+        """
+
+
 # --- W2: pagination (total sort + offset/limit) -------------------------------------------
 
 def orders_page2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -190,6 +286,13 @@ def orders_page2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .offset(10)
         .limit(20)
     )
+
+
+ORDERS_PAGE2_ORACLE_SQL = """
+            SELECT o_orderkey, o_custkey, o_orderdate, o_totalprice
+            FROM orders ORDER BY o_orderdate DESC, o_orderkey ASC
+            LIMIT 20 OFFSET 10
+        """
 
 
 # --- W: analytic windows (running totals + per-group top-k) ----------------------------------
@@ -212,6 +315,17 @@ def window_running_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+RUNNING_SPEND_ORACLE_SQL = """
+            SELECT user_id, event_id,
+                   row_number() OVER w AS rn,
+                   round(sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4)
+                       AS running_value
+            FROM events
+            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        """
+
+
 def window_top3_events_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.desc("value"), F.asc("event_id"))
@@ -220,6 +334,15 @@ def window_top3_events_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= 3)
         .select("user_id", "event_id", "event_type", "value", "rk")
     )
+
+
+TOP3_EVENTS_ORACLE_SQL = """
+            SELECT user_id, event_id, event_type, value, rk FROM (
+                SELECT *, row_number() OVER (PARTITION BY user_id
+                       ORDER BY value DESC, event_id ASC) AS rk
+                FROM events
+            ) WHERE rk <= 3
+        """
 
 
 # --- U1: head ∪ tail ---------------------------------------------------------------------------
@@ -231,6 +354,15 @@ def union_head_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     head = li.orderBy(F.asc("l_orderkey"), F.asc("l_linenumber")).limit(500)
     tail = li.orderBy(F.desc("l_orderkey"), F.desc("l_linenumber")).limit(500)
     return head.unionByName(tail)
+
+
+UNION_HEAD_TAIL_ORACLE_SQL = """
+            (SELECT l_orderkey, l_linenumber, l_quantity
+             FROM lineitem ORDER BY l_orderkey ASC, l_linenumber ASC LIMIT 500)
+            UNION ALL
+            (SELECT l_orderkey, l_linenumber, l_quantity
+             FROM lineitem ORDER BY l_orderkey DESC, l_linenumber DESC LIMIT 500)
+        """
 
 
 # --- A8: events metrics rollup -------------------------------------------------------------------
@@ -246,6 +378,15 @@ def events_daily_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+EVENTS_DAILY_ORACLE_SQL = """
+            SELECT event_type, date_trunc('day', ts) AS day,
+                   count(*) AS n_events,
+                   count(DISTINCT user_id) AS n_users,
+                   CAST(round(sum(CAST(value AS DECIMAL(28,8))), 4) AS DOUBLE) AS sum_value
+            FROM events GROUP BY event_type, date_trunc('day', ts)
+        """
+
+
 # --- P-series: predicate filters -----------------------------------------------------------------
 
 def filter_events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -256,6 +397,15 @@ def filter_events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("ts") < F.lit("2024-01-15"))
         & (F.col("value") > 50.0)
     ).select("event_id", "ts", "user_id", "event_type", "value")
+
+
+EVENTS_WINDOW_ORACLE_SQL = """
+            SELECT event_id, ts, user_id, event_type, value
+            FROM events
+            WHERE ts >= TIMESTAMP '2024-01-08 00:00:00'
+              AND ts < TIMESTAMP '2024-01-15 00:00:00'
+              AND value > 50.0
+        """
 
 
 # --- F-series scalar chains -----------------------------------------------------------------------
@@ -281,6 +431,25 @@ def f_date_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.select(
         "o_orderkey", "raw_date", F.date_format(normalized, "yyyy-MM-dd").alias("norm_date")
     )
+
+
+DATE_NORMALIZE_ORACLE_SQL = """
+            WITH raw AS (
+                SELECT o_orderkey,
+                       CASE o_orderkey % 3
+                         WHEN 0 THEN strftime(o_orderdate, '%Y-%m-%d')
+                         WHEN 1 THEN strftime(o_orderdate, '%m/%d/%Y')
+                         ELSE strftime(o_orderdate, '%d.%m.%Y')
+                       END AS raw_date
+                FROM orders
+            )
+            SELECT o_orderkey, raw_date,
+                   strftime(coalesce(
+                       try_strptime(raw_date, '%Y-%m-%d'),
+                       try_strptime(raw_date, '%m/%d/%Y'),
+                       try_strptime(raw_date, '%d.%m.%Y')), '%Y-%m-%d') AS norm_date
+            FROM raw
+        """
 
 
 def f_amount_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -310,6 +479,25 @@ def f_amount_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+AMOUNT_NORMALIZE_ORACLE_SQL = """
+            WITH raw AS (
+                SELECT o_orderkey,
+                       '$' || CASE WHEN o_orderkey % 2 = 0
+                         THEN format('{:,}', CAST(floor(o_totalprice) AS BIGINT))
+                              || '.' ||
+                              lpad(CAST(CAST(round(o_totalprice * 100) AS BIGINT) % 100
+                                   AS VARCHAR), 2, '0')
+                         ELSE printf('%.2f', o_totalprice)
+                       END AS raw_amount
+                FROM orders
+            )
+            SELECT o_orderkey, raw_amount,
+                   CAST(regexp_replace(raw_amount, '[^0-9.\\-]', '', 'g') AS DOUBLE)
+                       AS amount
+            FROM raw
+        """
+
+
 def f_clamp_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F14: clamp to [0,1] via least/greatest (langchain_extractor.py:657)."""
     cust = _t(spark, sf_dir, "customer")
@@ -320,6 +508,13 @@ def f_clamp_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least(F.lit(1.0), F.greatest(F.lit(0.0), score)), 6
         ).alias("clamped"),
     )
+
+
+CLAMP_SCORE_ORACLE_SQL = """
+            SELECT c_custkey,
+                   round(least(1.0, greatest(0.0, c_acctbal / 5000.0)), 6) AS clamped
+            FROM customer
+        """
 
 
 def f_doc_type_case(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -336,6 +531,18 @@ def f_doc_type_case(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+DOC_TYPE_CASE_ORACLE_SQL = """
+            SELECT doc_id,
+                   CASE
+                     WHEN contains(lower(coalesce(text, '')), 'table') THEN 'tabular'
+                     WHEN contains(lower(coalesce(text, '')), 'stream') THEN 'streaming'
+                     WHEN contains(lower(coalesce(text, '')), 'vector') THEN 'vector'
+                     ELSE 'other'
+                   END AS doc_type
+            FROM documents
+        """
+
+
 def f_lang_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1: CJK char-range regex (langchain_extractor.py:287-288)."""
     docs = _t(spark, sf_dir, "documents")
@@ -347,6 +554,14 @@ def f_lang_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+LANG_DETECT_ORACLE_SQL = """
+            SELECT doc_id,
+                   CASE WHEN regexp_matches(text, '[぀-ヿ一-鿿]')
+                        THEN 'ja' ELSE 'en' END AS detected_lang
+            FROM documents
+        """
+
+
 def filter_keyword_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P5: keyword-predicate filter over names (excel_validator.py:690-691)."""
     part = _t(spark, sf_dir, "part")
@@ -355,6 +570,14 @@ def filter_keyword_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("p_brand")
         .agg(F.count(F.lit(1)).alias("n_colored"))
     )
+
+
+KEYWORD_HEADERS_ORACLE_SQL = """
+            SELECT p_brand, count(*) AS n_colored
+            FROM part
+            WHERE regexp_matches(p_name, '(green|blue|red)')
+            GROUP BY p_brand
+        """
 
 
 # --- A3: keyword score aggregation + argmax doc-type ---------------------------
@@ -389,6 +612,35 @@ def agg_keyword_score_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+KEYWORD_ARGMAX_ORACLE_SQL = """
+            WITH s AS (
+                SELECT doc_id,
+                       CASE WHEN regexp_matches(lower(coalesce(text,'')), 'invoice') THEN 2 ELSE 0 END
+                     + CASE WHEN regexp_matches(lower(coalesce(text,'')), 'total|vendor|due') THEN 1 ELSE 0 END AS s_invoice,
+                       CASE WHEN regexp_matches(lower(coalesce(text,'')), 'report|sales') THEN 2 ELSE 0 END
+                     + CASE WHEN regexp_matches(lower(coalesce(text,'')), 'summary|quarter') THEN 1 ELSE 0 END AS s_report,
+                       CASE WHEN regexp_matches(lower(coalesce(text,'')), 'inventory|catalog') THEN 2 ELSE 0 END
+                     + CASE WHEN regexp_matches(lower(coalesce(text,'')), 'stock|sku') THEN 1 ELSE 0 END AS s_inventory,
+                       CASE WHEN regexp_matches(lower(coalesce(text,'')), 'form|application') THEN 2 ELSE 0 END
+                     + CASE WHEN regexp_matches(lower(coalesce(text,'')), 'field|signature') THEN 1 ELSE 0 END AS s_form
+                FROM documents
+            )
+            SELECT doc_id,
+                   CAST(s_invoice AS BIGINT) AS s_invoice,
+                   CAST(s_report AS BIGINT) AS s_report,
+                   CAST(s_inventory AS BIGINT) AS s_inventory,
+                   CAST(s_form AS BIGINT) AS s_form,
+                   CASE
+                     WHEN greatest(s_invoice, s_report, s_inventory, s_form) = 0 THEN 'generic'
+                     WHEN s_invoice = greatest(s_invoice, s_report, s_inventory, s_form) THEN 'invoice'
+                     WHEN s_report = greatest(s_invoice, s_report, s_inventory, s_form) THEN 'report'
+                     WHEN s_inventory = greatest(s_invoice, s_report, s_inventory, s_form) THEN 'inventory'
+                     ELSE 'form'
+                   END AS detected_type
+            FROM s
+        """
+
+
 # --- F11: JSON parse with error-path fallback -----------------------------------
 
 def f_json_parse_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -416,6 +668,27 @@ def f_json_parse_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+JSON_FALLBACK_ORACLE_SQL = """
+            WITH raw AS (
+                SELECT o_orderkey,
+                       CASE WHEN o_orderkey % 3 < 2
+                         THEN '{"key": ' || o_orderkey || ', "status": "' || o_orderstatus || '"}'
+                         ELSE '{"key": broken'
+                       END AS payload
+                FROM orders
+            )
+            SELECT o_orderkey,
+                   CASE WHEN json_valid(payload)
+                        THEN CAST(json_extract(payload, '$.key') AS BIGINT) END AS parsed_key,
+                   coalesce(
+                       CASE WHEN json_valid(payload)
+                            THEN json_extract_string(payload, '$.status') END,
+                       'raw_extraction') AS parsed_status,
+                   NOT json_valid(payload) AS parse_failed
+            FROM raw
+        """
+
+
 # --- P4/W3: per-group ordered head-k sample --------------------------------------
 
 def agg_first3_events_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -435,6 +708,18 @@ def agg_first3_events_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+FIRST3_EVENTS_ORACLE_SQL = """
+            SELECT user_id,
+                   array_to_string(
+                       list_transform(
+                           (list(event_id ORDER BY ts, event_id))[1:3],
+                           e -> CAST(e AS VARCHAR)),
+                       ',') AS first3_event_ids,
+                   count(*) AS n_events
+            FROM events GROUP BY user_id
+        """
+
+
 # --- A7+: cube over order dimensions ----------------------------------------------
 
 def agg_cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -443,6 +728,14 @@ def agg_cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_orders"),
         _dsum(F.col("o_totalprice")).alias("total_price"),
     )
+
+
+CUBE_STATUS_ORACLE_SQL = """
+            SELECT o_orderstatus, o_orderpriority,
+                   count(*) AS n_orders,
+                   CAST(round(sum(CAST(o_totalprice AS DECIMAL(28,8))), 2) AS DOUBLE) AS total_price
+            FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
+        """
 
 
 # --- sessionization (gaps-and-islands) -------------------------------------------
@@ -474,6 +767,37 @@ def window_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         _dsum(F.col("value"), 4).alias("session_value"),
     )
+
+
+SESSIONIZE_ORACLE_SQL = """
+            WITH s AS (
+                -- floor(epoch) truncates sub-second fractions, matching
+                -- Spark's unix_timestamp; a bare CAST rounds to nearest
+                -- and shifts ~half the epochs by 1s (spurious boundary
+                -- flips for gaps straddling 1800s)
+                SELECT user_id, event_id, ts, value,
+                       CASE WHEN lag(CAST(floor(epoch(ts)) AS BIGINT)) OVER w IS NULL
+                              OR CAST(floor(epoch(ts)) AS BIGINT)
+                                 - lag(CAST(floor(epoch(ts)) AS BIGINT)) OVER w > 1800
+                            THEN 1 ELSE 0 END AS new_session
+                FROM events
+                WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+            ),
+            t AS (
+                SELECT *, CAST(sum(new_session) OVER (
+                         PARTITION BY user_id ORDER BY ts, event_id
+                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                     AS BIGINT) AS session_seq
+                FROM s
+            )
+            SELECT user_id, session_seq,
+                   min(ts) AS session_start,
+                   max(ts) AS session_end,
+                   count(*) AS n_events,
+                   CAST(round(sum(CAST(value AS DECIMAL(28,8))), 4) AS DOUBLE)
+                       AS session_value
+            FROM t GROUP BY user_id, session_seq
+        """
 
 
 # --- ordered conversion funnel -----------------------------------------------

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..pipeline import extract_pages
+from ..pipeline import extract_pages, pages_from_documents
 
 N_ORDERS = 50  # first N orderkeys make one synthetic page each
 
@@ -260,6 +260,34 @@ ORACLE_SQL = f"""
            li.l_returnflag AS flag
     FROM lineitem li JOIN keys USING (l_orderkey)
 """
+
+
+def pipeline_main_text(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark pipeline main_text vs SQL-reconstructable expectation:
+    strip(wrap(text)) == whitespace-canonical text.
+
+    The comparison column is `nonempty` (main_text <> ''), NOT the
+    pipeline's `valid`: valid folds in schema validation, which SQL
+    cannot reconstruct — a fixture that happened to contain an
+    invoice/report keyword would make an equality oracle on `valid`
+    report a spurious mismatch. The real valid semantics are pinned by
+    tests/test_pipeline_parity.py against the kernel oracle."""
+    pages = pages_from_documents(spark, sf_dir)
+    return extract_pages(pages, run_id="oracle", num_partitions=8).select(
+        "url", "main_text", (F.col("main_text") != "").alias("nonempty")
+    )
+
+
+# nbsp (chr(160)) replaced before the \\s collapse to mirror the
+# kernel's collapse_ws exactly (RE2's \\s is ASCII-only)
+MAIN_TEXT_ORACLE_SQL = """
+            SELECT 'https://' || source || '.example.com/doc/' || doc_id AS url,
+                   trim(regexp_replace(replace(coalesce(text, ''), chr(160), ' '),
+                        '\\s+', ' ', 'g')) AS main_text,
+                   trim(regexp_replace(replace(coalesce(text, ''), chr(160), ' '),
+                        '\\s+', ' ', 'g')) <> '' AS nonempty
+            FROM documents
+        """
 
 
 def pipeline_domain_report(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -260,6 +260,53 @@ def sniff_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+SNIFF_ORACLE_SQL = """
+            WITH base AS (
+                SELECT doc_id,
+                       CAST(floor(doc_id / 4) AS BIGINT) % 4 AS bm,
+                       doc_id % 53 = 0 AS is_empty,
+                       CASE doc_id % 4 WHEN 0 THEN ',' WHEN 1 THEN ';'
+                            WHEN 2 THEN chr(9) ELSE '|' END AS d,
+                       source, coalesce(lang, '') AS lang0,
+                       substr(coalesce(text, ''), 1, 120) AS sample
+                FROM documents
+            ),
+            built AS (
+                SELECT doc_id, bm, is_empty,
+                       CASE WHEN is_empty THEN '' ELSE
+                           'id' || d || 'status' || d || 'label' || chr(10) ||
+                           CAST(doc_id AS VARCHAR) || d || source || d || lang0 || chr(10) ||
+                           sample || chr(10) ||
+                           repeat(',', CAST(doc_id % 5 AS INT)) ||
+                           repeat(';', CAST(doc_id % 7 AS INT)) ||
+                           repeat('|', CAST(doc_id % 3 AS INT))
+                       END AS body
+                FROM base
+            ),
+            counted AS (
+                SELECT doc_id, bm, is_empty,
+                       length(body) - length(replace(body, ',', '')) AS cc,
+                       length(body) - length(replace(body, ';', '')) AS cs,
+                       length(body) - length(replace(body, chr(9), '')) AS ct,
+                       length(body) - length(replace(body, '|', '')) AS cp
+                FROM built
+            )
+            SELECT doc_id,
+                   CASE WHEN is_empty THEN 'utf-8'
+                        WHEN bm = 0 THEN 'utf-8-sig'
+                        WHEN bm = 1 THEN 'utf-16-le'
+                        WHEN bm = 2 THEN 'utf-16-be'
+                        ELSE 'utf-8' END AS encoding,
+                   CASE WHEN cc = greatest(cc, cs, ct, cp) THEN ','
+                        WHEN cs = greatest(cc, cs, ct, cp) THEN ';'
+                        WHEN ct = greatest(cc, cs, ct, cp) THEN chr(9)
+                        ELSE '|' END AS delimiter,
+                   NOT is_empty AS accepted,
+                   CASE WHEN is_empty THEN 'empty payload' END AS skip_reason
+            FROM counted
+        """
+
+
 def upload_gate(df: DataFrame) -> DataFrame:
     """P6 upload gate as skip-with-reason rows (never an exception):
     adds (accepted boolean, skip_reason string)."""

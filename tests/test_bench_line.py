@@ -5,7 +5,8 @@ float-precision fallback tiers. Pure-function pins, no Spark."""
 
 import json
 
-from bench import compact_line
+import __spark_entry__ as em
+from bench import COLD, HEADLINE, compact_line
 
 
 def _fake_timings(n):
@@ -43,3 +44,13 @@ def test_emergency_tier_keeps_the_slowest_and_says_so():
             k for k, _ in sorted(t.items(), key=lambda kv: -kv[1])[:40]
         }
         assert kept == slowest
+
+
+def test_bench_query_lists_name_real_queries():
+    """A renamed or dropped operator fails here, not minutes into a bench
+    run. No Spark: only the operator table is read."""
+    names = set(em.queries())
+    assert [n for n in HEADLINE + COLD if n not in names] == []
+    assert len(set(HEADLINE)) == len(HEADLINE)
+    assert len(set(COLD)) == len(COLD)
+    assert set(COLD) <= set(HEADLINE)

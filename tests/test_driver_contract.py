@@ -1,6 +1,8 @@
 """Driver-contract hygiene: the exact invariants the round driver's
 correctness gate depends on."""
 
+import pytest
+
 import __spark_entry__ as em
 
 
@@ -47,3 +49,16 @@ def test_oracle_sql_strings_are_wellformed():
         )
     for name, sql in em.oracle_sql().items():
         con.execute(sql)  # raises on syntax/semantic errors
+
+
+def test_oracles_follow_the_query_order():
+    """Both dicts are views of the one operator table, so a twin can never
+    drift to another position (or another name) than its builder."""
+    assert list(em.queries()) == list(em.oracle_sql())
+
+
+def test_a_repeated_operator_name_raises(monkeypatch):
+    row = ("twice_added_op", em.entry, "SELECT 1")
+    monkeypatch.setattr(em, "_OPS", em._OPS + [row, row])
+    with pytest.raises(ValueError, match="twice_added_op"):
+        em.queries()
